@@ -189,13 +189,16 @@ object CellIndex {
     disk(cell, kHi).filterNot(inner.contains(_))
   }
 
-  /** Covering cells of a geometry at `res`: all cells intersecting the bbox,
-    * then (for polygonal geoms) filtered to cells whose box intersects the
-    * geometry (cheap test: cell center inside OR any geometry vertex inside
-    * the cell OR bbox-overlap when the cell is larger than the feature).
-    * Always a superset of the exact cover — exact predicates re-filter after
-    * the cell equi-join (SURVEY.md §2.3 J5/J7).
-    * Sorted ascending; capped via `maxCells` by coarsening the resolution.
+  /** Covering cells of a geometry: every cell at `res0` that intersects the
+    * geometry's bbox ([[coverAt]]; no per-cell geometry test). Always a
+    * superset of the exact cover — exact predicates re-filter after the
+    * cell equi-join (SURVEY.md §2.3 J5/J7). Sorted ascending.
+    *
+    * When the bbox spans more than `maxCells` cells the resolution is
+    * lowered until it fits. Cell ids encode their resolution, so a
+    * coarsened cover never equals a `res0` point cell: equi-joining it
+    * against points keyed at `res0` silently loses every row. Joins use
+    * [[coverAtMost]] instead, which fails rather than coarsens.
     */
   def cover(g: Geom, res0: Int, maxCells: Int = 4096): Array[Long] = {
     var r = res0
@@ -210,6 +213,18 @@ object CellIndex {
     val x0 = scaleX(minx, n); val x1 = scaleX(maxx, n)
     val y0 = scaleY(miny, n); val y1 = scaleY(maxy, n)
     (x1 - x0 + 1) * (y1 - y0 + 1)
+  }
+
+  /** [[coverAt]] for cell equi-joins keyed at `res`: fails with a clear
+    * error when the cover would exceed `maxCells`, where [[cover]] would
+    * coarsen it into cells no point at `res` can match. */
+  def coverAtMost(g: Geom, res: Int, maxCells: Int): Array[Long] = {
+    val n = coverCount(g, res)
+    require(n <= maxCells,
+      s"cell cover of $n cells at res $res exceeds maxCells=$maxCells; a coarser cover would " +
+        "match no point cell and drop rows silently. Use SpatialOps.pipJoin with " +
+        "broadcastPolys = true (covers at the join resolution), a lower res or a larger maxCells")
+    coverAt(g, res)
   }
 
   /** Hard ceiling on a single cover's cell count: beyond this the array

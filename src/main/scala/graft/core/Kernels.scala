@@ -255,7 +255,7 @@ object Kernels {
     * MultiPolygon / GeometryCollection; other kinds → false).
     *
     * TRUE zero allocation: reads ints/doubles straight out of the byte
-    * array with manual endianness handling — no ByteBuffer.wrap. The
+    * array through byte-array VarHandle views — no ByteBuffer.wrap. The
     * previous wrap-per-call version allocated one buffer per joined row;
     * at 10⁸⁺ rows/core that garbage is what throttles the 32-way arm of
     * the scaling run (GC threads compete with worker threads).
@@ -266,55 +266,34 @@ object Kernels {
   def containsWkb(wkb: Array[Byte], px: Double, py: Double): Boolean =
     (containsAt(wkb, 0, px, py) & 1L) == 1L
 
-  @inline private def rdInt(b: Array[Byte], off: Int, le: Boolean): Int =
-    if (le)
-      (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8) | ((b(off + 2) & 0xFF) << 16) | ((b(off + 3) & 0xFF) << 24)
-    else
-      ((b(off) & 0xFF) << 24) | ((b(off + 1) & 0xFF) << 16) | ((b(off + 2) & 0xFF) << 8) | (b(off + 3) & 0xFF)
+  @inline private def rdInt(b: Array[Byte], off: Int, le: Boolean): Int = ByteView.getInt(b, off, le)
 
-  @inline private def rdDouble(b: Array[Byte], off: Int, le: Boolean): Double = {
-    var bits = 0L
-    if (le) {
-      var i = 7
-      while (i >= 0) { bits = (bits << 8) | (b(off + i) & 0xFFL); i -= 1 }
-    } else {
-      var i = 0
-      while (i < 8) { bits = (bits << 8) | (b(off + i) & 0xFFL); i += 1 }
-    }
-    java.lang.Double.longBitsToDouble(bits)
-  }
+  @inline private def rdDouble(b: Array[Byte], off: Int, le: Boolean): Double = ByteView.getDouble(b, off, le)
 
-  /** One geometry at `off`; returns (nextOffset << 1) | inside. */
-  private def containsAt(b: Array[Byte], off: Int, px: Double, py: Double): Long = {
-    val le = b(off) != 0
-    val rawType = rdInt(b, off + 1, le)
-    var p = off + 5
-    if ((rawType & 0x20000000) != 0) p += 4 // skip SRID
-    // reject Z/M the same way Wkb.get does: rings below assume 16 bytes per
-    // point, so EWKB flag bits (0x80/0x40) or ISO type offsets (1001, 2003…)
-    // would silently misparse the coordinate stream into arbitrary answers
+  /** Offset of the body of the geometry whose header (order byte, type)
+    * starts at `off`, past the SRID if flagged. Rejects Z/M the same way
+    * Wkb.get does: the walks here assume 16 bytes per point, so EWKB flag
+    * bits (0x80/0x40) or ISO type offsets (1001, 2003…) would silently
+    * misparse the coordinate stream into arbitrary answers. */
+  private def bodyAt(off: Int, rawType: Int): Int = {
     if ((rawType & 0xC0000000) != 0)
       throw new IllegalArgumentException(
         "wkb: EWKB Z/M geometry not supported — engine is 2-D")
     if ((rawType & 0x0FFFFFFF) >= 1000)
       throw new IllegalArgumentException(
         s"wkb: ISO Z/M geometry (type ${rawType & 0x0FFFFFFF}) not supported — engine is 2-D")
+    if ((rawType & 0x20000000) != 0) off + 9 else off + 5
+  }
+
+  /** One geometry at `off`; returns (nextOffset << 1) | inside. */
+  private def containsAt(b: Array[Byte], off: Int, px: Double, py: Double): Long = {
+    val le = b(off) != 0
+    val rawType = rdInt(b, off + 1, le)
+    var p = bodyAt(off, rawType)
     rawType & 0xFF match {
       case 3 =>
         polygonContains(b, p, le, px, py)
-      case 6 =>
-        val n = rdInt(b, p, le); p += 4
-        var found = false
-        var i = 0
-        while (i < n) {
-          val le2 = b(p) != 0
-          val r = polygonContains(b, p + 5, le2, px, py) // inner type int skipped
-          p = (r >>> 1).toInt
-          if ((r & 1L) == 1L) found = true
-          i += 1
-        }
-        (p.toLong << 1) | (if (found) 1L else 0L)
-      case 7 =>
+      case 6 | 7 => // members carry their own header (byte order, SRID flag)
         val n = rdInt(b, p, le); p += 4
         var found = false
         var i = 0
@@ -385,8 +364,8 @@ object Kernels {
       var i = 0
       while (i < n) {
         val le2 = b(p) != 0
-        val t2 = rdInt(b, p + 1, le2) & 0xFF
-        p = skipBody(b, p + 5, le2, t2)
+        val raw = rdInt(b, p + 1, le2)
+        p = skipBody(b, bodyAt(p, raw), le2, raw & 0xFF)
         i += 1
       }
       p
@@ -412,4 +391,8 @@ object Kernels {
   /** Covering cells of a WKB geometry (superset cover; maxCells coarsens). */
   def cellCover(wkb: Array[Byte], res: Int, maxCells: Int): Array[Long] =
     CellIndex.cover(Wkb.read(wkb), res, maxCells)
+
+  /** Covering cells at exactly `res`; above maxCells it fails, never coarsens. */
+  def cellCoverAtMost(wkb: Array[Byte], res: Int, maxCells: Int): Array[Long] =
+    CellIndex.coverAtMost(Wkb.read(wkb), res, maxCells)
 }

@@ -45,9 +45,10 @@ case class MisraGries(
   /** Add `w` items of `s`: bump if tracked or free slot, else decrement
     * all by the amount that empties at least one slot (batched MG step). */
   private def add(buf: HashMap[String, Long], s: String, w: Long): Unit = {
-    val cur = buf.get(s)
-    if (cur != null || buf.size < k) {
-      buf.put(s, if (cur == null) w else cur + w)
+    // containsKey, not get: a missing key unboxes to 0L, never null
+    val tracked = buf.containsKey(s)
+    if (tracked || buf.size < k) {
+      buf.put(s, if (tracked) buf.get(s) + w else w)
     } else {
       // decrement by min(w, smallest tracked count); repeat via recursion
       var min = Long.MaxValue

@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.functions.st
-import graft.core.CellIndex
+import graft.core.PipIndex
 
 /** Distributed spatial operators, built Spark-first (SURVEY.md §2.3 J5–J7,
   * §2.6 O4): declarative plans over the cell index; Catalyst/AQE pick
@@ -12,12 +15,16 @@ import graft.core.CellIndex
   * can't know better.
   *
   * Scale design notes (100 TB target):
-  *  - PIP join is always cell-prefilter equi-join + exact residual — never a
-  *    theta/cross join. Polygon side exploded to covering cells; points carry
-  *    exactly one cell each, so no post-join dedup is needed.
-  *  - Small polygon dictionaries are broadcast (no shuffle of the point
-  *    side); large ones fall back to sort-merge on cell with optional
-  *    explicit salting for hot cells (skew rule in BASELINE.json).
+  *  - PIP join is never a theta/cross join. Points carry exactly one cell
+  *    each, so no post-join dedup is needed. Small polygon dictionaries are
+  *    collected once and prepared into a broadcast [[graft.core.PipIndex]]
+  *    (flat coordinates + sorted cell → polygon table, O(cells + vertices)):
+  *    each point looks up its cell and ray-casts only the polygons listed
+  *    there, and the attribute rows (no geometry) are broadcast-joined back.
+  *    Dictionaries too big for the driver use the cell-prefilter equi-join
+  *    + exact residual (polygon side exploded to its cover cells, sort-merge
+  *    on cell) with optional explicit salting for hot cells (skew rule in
+  *    BASELINE.json).
   *  - kNN is ring expansion: a handful of bounded distributed passes, each an
   *    equi-join on cell; stragglers (sparse regions) escalate ring radius
   *    geometrically. No per-row driver loops.
@@ -33,27 +40,52 @@ object SpatialOps {
     (phash.bitwiseAND(lit(0xFFFFFFFFL))).cast("double") / 4294967296.0 * 170.0 - 85.0
 
   /** Point-in-polygon join: each point row joined to every polygon containing
-    * it. `polys` must have (`idCols`..., `geomCol`: WKB). Returns point rows
-    * + polygon id columns.
+    * it (`st.contains` semantics). `polys` must have (`idCols`..., `geomCol`:
+    * WKB). Returns point rows + polygon id columns.
     *
-    * @param broadcastPolys broadcast the exploded polygon-cell dict (correct
-    *   for dictionaries up to ~100s of MB; the common case). When false, a
-    *   sort-merge join on `cell` is used — combine with [[saltCells]] for
-    *   hot-cell skew.
+    * @param broadcastPolys (default) COLLECTS `polys` to the driver when
+    *   `pipJoin` is called and prepares a [[graft.core.PipIndex]] at `res`,
+    *   broadcast once: decoded coordinates plus the cell → polygon table,
+    *   O(cells + vertices) — e.g. country outlines of 10⁴ vertices over
+    *   thousands of cells stay a few MB, where broadcasting the polygon's
+    *   WKB on every cover-cell row reached gigabytes. Covers stay at `res`
+    *   (never coarsened), so large polygons are exact; a single cover above
+    *   [[graft.core.CellIndex.MaxCoverCells]] fails here. The broadcast is
+    *   never destroyed: the returned frame may re-execute (streaming
+    *   micro-batches, re-used plans), and Spark's ContextCleaner reclaims
+    *   it once the frame is unreachable. `polys` must be a batch frame;
+    *   `points` may stream.
+    *   When false — dictionaries too big for the driver — a sort-merge join
+    *   on `cell` is used (combine with [[saltCells]] for hot-cell skew); a
+    *   polygon whose cover at `res` exceeds 4096 cells fails the query with
+    *   a clear error rather than coarsening into cells no point can match.
     */
   def pipJoin(
       points: DataFrame, lon: Column, lat: Column,
       polys: DataFrame, geomCol: String,
       res: Int,
-      broadcastPolys: Boolean = true): DataFrame = {
-    val polyCells = polys
-      .withColumn("__cell", explode(st.cellCover(col(geomCol), res)))
-    val pts = points.withColumn("__cell", st.cellId(lon, lat, res))
-    val build = if (broadcastPolys) broadcast(polyCells) else polyCells
-    pts.join(build, "__cell")
-      .filter(st.contains(col(geomCol), lon, lat))
-      .drop("__cell", geomCol)
-  }
+      broadcastPolys: Boolean = true): DataFrame =
+    if (broadcastPolys) {
+      val spark = points.sparkSession
+      val rows = polys.collect()
+      val g = polys.schema.fieldIndex(geomCol)
+      val index = PipIndex.build(rows.map(r => if (r.isNullAt(g)) null else r.getAs[Array[Byte]](g)), res)
+      val bc = spark.sparkContext.broadcast(index)
+      val attrSchema = StructType(polys.schema.fields.patch(g, Nil, 1))
+        .add("__pidx", IntegerType, nullable = false)
+      val attrs = spark.createDataFrame(
+        rows.indices.map(i => Row.fromSeq(rows(i).toSeq.patch(g, Nil, 1) :+ i)).asJava, attrSchema)
+      points.withColumn("__pidx", explode(st.pipMatches(lon, lat, bc)))
+        .join(broadcast(attrs), "__pidx")
+        .drop("__pidx")
+    } else {
+      val polyCells = polys
+        .withColumn("__cell", explode(st.cellCover(col(geomCol), res, atMost = true)))
+      points.withColumn("__cell", st.cellId(lon, lat, res))
+        .join(polyCells, "__cell")
+        .filter(st.contains(col(geomCol), lon, lat))
+        .drop("__cell", geomCol)
+    }
 
   /** Cell equi-join with explicit salting for hot cells (explicit skew
     * handling mandated by BASELINE.json; AQE skew-join also stays on).

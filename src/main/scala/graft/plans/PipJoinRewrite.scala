@@ -23,10 +23,16 @@ import graft.functions.{StCellCover, StCellId, StContains}
   *
   * The cover is a superset of the geometry, each point maps to exactly one
   * cell, and cover cells are distinct per polygon — so the equi-join +
-  * residual is row-equivalent to the theta-join (inner joins only).
+  * residual is row-equivalent to the theta-join (inner joins only). A
+  * polygon whose cover at res exceeds 4096 cells fails the query with a
+  * clear error rather than coarsening into cells no point can match.
   * Catalyst then plans a hash join (broadcast or shuffled, by stats/AQE)
   * instead of a nested loop. Resolution res via `spark.graft.pip.res`
   * (default 7).
+  *
+  * The rule keeps this cell-join form rather than the prepared
+  * [[graft.core.PipIndex]] of `pipJoin`'s broadcast path: building that
+  * index collects the polygons, and an optimizer rule cannot run jobs.
   */
 case class PipJoinRewrite(sqlConf: org.apache.spark.sql.internal.SQLConf) extends Rule[LogicalPlan] {
 
@@ -74,7 +80,7 @@ case class PipJoinRewrite(sqlConf: org.apache.spark.sql.internal.SQLConf) extend
           case None => j
           case Some((_, g, lon, lat, polysOnLeft)) =>
             val cellAttr = AttributeReference("__pip_cell", LongType, nullable = false)()
-            val cover = Explode(StCellCover(g, Literal(res), Literal(4096)))
+            val cover = Explode(StCellCover(g, Literal(res), Literal(4096), atMost = true))
             val polySide = if (polysOnLeft) left else right
             val gen = Generate(cover, unrequiredChildIndex = Nil, outer = false,
               qualifier = None, generatorOutput = Seq(cellAttr), child = polySide)

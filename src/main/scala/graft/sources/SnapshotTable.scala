@@ -84,12 +84,12 @@ object SnapshotTable {
           "rows" -> JNum(b.rows),
           "fingerprint" -> JStr(java.lang.Long.toHexString(b.fingerprint)),
           "buckets" -> JArr(b.buckets.map { st =>
-            JObj.of("bucket" -> JNum(st.bucket), "rows" -> JNum(st.rows),
+            JObj.of("bucket" -> JStr(st.bucket.toString), "rows" -> JNum(st.rows),
               "fingerprint" -> JStr(java.lang.Long.toHexString(st.fingerprint)))
           }),
           "fileStats" -> JArr(b.fileStats.map { fs =>
-            JObj.of("file" -> JStr(fs.file), "minBucket" -> JNum(fs.minBucket),
-              "maxBucket" -> JNum(fs.maxBucket), "rows" -> JNum(fs.rows))
+            JObj.of("file" -> JStr(fs.file), "minBucket" -> JStr(fs.minBucket.toString),
+              "maxBucket" -> JStr(fs.maxBucket.toString), "rows" -> JNum(fs.rows))
           }))
       })).render
 
@@ -97,6 +97,12 @@ object SnapshotTable {
     val o = Json.parse(s).asInstanceOf[JObj]
     def num(v: JValue): Double = v.asInstanceOf[JNum].v
     def str(v: JValue): String = v.asInstanceOf[JStr].v
+    // bucket ids are written as exact decimal strings: as JSON numbers
+    // (older manifests) cell ids above 2^53 come back rounded
+    def long(v: JValue): Long = v match {
+      case JStr(x) => x.toLong
+      case n       => num(n).toLong
+    }
     val batches = o("batches").asInstanceOf[JArr].items.map { bv =>
       val b = bv.asInstanceOf[JObj]
       Batch(
@@ -106,14 +112,19 @@ object SnapshotTable {
         java.lang.Long.parseUnsignedLong(str(b("fingerprint")), 16),
         b("buckets").asInstanceOf[JArr].items.map { sv =>
           val st = sv.asInstanceOf[JObj]
-          BucketStat(num(st("bucket")).toLong, num(st("rows")).toLong,
+          BucketStat(long(st("bucket")), num(st("rows")).toLong,
             java.lang.Long.parseUnsignedLong(str(st("fingerprint")), 16))
         },
-        // absent in pre-round-2 manifests: falls back to no file skipping
-        b.get("fileStats").map(_.asInstanceOf[JArr].items.map { fv =>
+        // absent in pre-round-2 manifests: falls back to no file skipping.
+        // Numeric bounds (older manifests) may be rounded, so such a file
+        // keeps no stat and readRange/readBuckets read it unpruned.
+        b.get("fileStats").map(_.asInstanceOf[JArr].items.flatMap { fv =>
           val fs = fv.asInstanceOf[JObj]
-          FileStat(str(fs("file")), num(fs("minBucket")).toLong,
-            num(fs("maxBucket")).toLong, num(fs("rows")).toLong)
+          (fs("minBucket"), fs("maxBucket")) match {
+            case (JStr(lo), JStr(hi)) =>
+              Some(FileStat(str(fs("file")), lo.toLong, hi.toLong, num(fs("rows")).toLong))
+            case _ => None
+          }
         }).getOrElse(Vector.empty))
     }
     Snapshot(num(o("version")).toInt, batches)
@@ -278,7 +289,12 @@ object SnapshotTable {
     Files.writeString(tmp, renderSnapshot(next))
     Files.move(tmp, snapDir(table).resolve(s"v${next.version}.json"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Files.writeString(snapDir(table).resolve("LATEST"), next.version.toString)
+    // LATEST too is replaced by rename: writing it in place exposes an
+    // empty file to a concurrent currentVersion (NumberFormatException)
+    val latestTmp = snapDir(table).resolve(s".LATEST.v${next.version}.tmp")
+    Files.writeString(latestTmp, next.version.toString)
+    Files.move(latestTmp, snapDir(table).resolve("LATEST"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Compact every committed batch into ONE batch — the small-file answer
@@ -391,9 +407,11 @@ object SnapshotTable {
   /** Manifest-level file skipping: read only the files whose recorded
     * bucket range overlaps [lo, hi] — the planner never even lists the
     * skipped files (coarser than, and complementary to, parquet row-group
-    * pruning). Files from pre-fileStats manifests are conservatively read.
-    * The caller still applies its exact predicate; this is a superset scan,
-    * like every manifest prune. Returns (frame, selectedFiles, totalFiles).
+    * pruning). Files from pre-fileStats manifests, or whose bounds an older
+    * manifest stored as (possibly rounded) JSON numbers, are conservatively
+    * read. The caller still applies its exact predicate; this is a superset
+    * scan, like every manifest prune. Returns (frame, selectedFiles,
+    * totalFiles).
     */
   def readRange(spark: SparkSession, table: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val snap = currentSnapshot(table)

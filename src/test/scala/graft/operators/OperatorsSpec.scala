@@ -34,6 +34,64 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(brute.nonEmpty)
   }
 
+  /** Messages of `e` and its causes. */
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+
+  test("pipJoin: broadcast index == cell join on district polygons + random polygons") {
+    val rnd = new scala.util.Random(5)
+    def star(cx: Double, cy: Double, r: Double, n: Int) = {
+      val ps = (0 until n).map { i =>
+        val a = 2 * math.Pi * i / n; val rr = r * (0.4 + 0.6 * rnd.nextDouble())
+        graft.core.Pt(cx + rr * math.cos(a), cy + rr * math.sin(a))
+      }.toVector
+      ps :+ ps.head
+    }
+    import graft.core.{GMultiPolygon, GPolygon}
+    val random = (0 until 40).map { i =>
+      val cx = rnd.nextDouble() * 320 - 160; val cy = rnd.nextDouble() * 140 - 70
+      val r = 1 + rnd.nextDouble() * 8
+      val g =
+        if (i % 4 == 0) GMultiPolygon(Vector(Vector(star(cx, cy, r, 9)), Vector(star(cx + r, cy, r / 2, 6))))
+        else GPolygon(Vector(star(cx, cy, r, 5 + rnd.nextInt(20))) ++
+          (if (i % 3 == 0) Vector(star(cx, cy, r / 4, 5)) else Vector.empty))
+      (s"rand_$i", Wkb.write(g))
+    }.toDF("district", "geom")
+    val polys = graft.EntryQueries.districtPolygons(spark).union(random)
+    val pts = spark.range(30000).select(col("id"), st.phashFor(col("id")).as("phash"))
+      .withColumn("lon", SpatialOps.phashLon(col("phash")))
+      .withColumn("lat", SpatialOps.phashLat(col("phash")))
+      .cache()
+    for (res <- Seq(6, 7)) {
+      val a = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res)
+      val b = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res, broadcastPolys = false)
+      assert(a.schema == b.schema)
+      def rows(df: DataFrame) = df.as[(Long, Long, Double, Double, String)].collect().toSeq.sortBy(t => (t._1, t._5))
+      val got = rows(a)
+      assert(got == rows(b), s"res $res")
+      assert(got.map(_._5).distinct.size > 20, s"res $res: too few polygons hit")
+    }
+  }
+
+  test("pipJoin on a polygon whose cell cover would coarsen: exact, or fails loudly") {
+    val rect = Wkb.write(Wkt.parse("POLYGON ((-170 -80, 170 -80, 170 80, -170 80, -170 -80))"))
+    val polys = Seq((0L, rect)).toDF("poly_id", "geom")
+    val pts = spark.range(2000).select(col("id"),
+      (pmod(st.mix64(col("id")), lit(339000L)).cast("double") / 1000.0 - 169.5).as("lon"),
+      (pmod(st.mix64(col("id") + 1000000), lit(159000L)).cast("double") / 1000.0 - 79.5).as("lat"))
+    val got = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res = 7)
+      .select("id", "poly_id").as[(Long, Long)].collect().toSet
+    val brute = pts.crossJoin(polys)
+      .filter(st.contains(col("geom"), col("lon"), col("lat")))
+      .select("id", "poly_id").as[(Long, Long)].collect().toSet
+    assert(brute.size == 2000)
+    assert(got == brute)
+    val e = intercept[Exception] {
+      SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res = 7, broadcastPolys = false).collect()
+    }
+    assert(messages(e).exists(_.contains("exceeds maxCells")), messages(e).mkString("\n"))
+  }
+
   test("saltedCellJoin == plain cell join rows") {
     val pts = seededPoints(2000)
       .withColumn("cell", st.cellId(col("lon"), col("lat"), 4))

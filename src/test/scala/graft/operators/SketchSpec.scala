@@ -124,6 +124,24 @@ class SketchSpec extends AnyFunSuite {
     }.toSet)
   }
 
+  test("Misra-Gries buffer holds at most k entries, after updates and after a merge") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val k = 5
+    val mg = graft.functions.MisraGries(BoundReference(0, StringType, nullable = true), k)
+    def fill(keys: Seq[String]) =
+      keys.foldLeft(mg.createAggregationBuffer())((b, s) => mg.update(b, InternalRow(UTF8String.fromString(s))))
+    // "hot" is 35 of 90 items (> n/(k+1)): it must survive any eviction
+    val a = fill((0 until 50).map(i => if (i % 2 == 0) "hot" else s"a$i"))
+    val b = fill((0 until 40).map(i => if (i % 4 == 0) "hot" else s"b$i"))
+    assert(a.size <= k && b.size <= k)
+    val m = mg.merge(a, mg.deserialize(mg.serialize(b)))
+    assert(m.size <= k)
+    assert(m.containsKey("hot"))
+  }
+
   test("kmvEst kernel: exact integer formula, clamp and cap") {
     // u = 2^63 → est = (k-1)*2 exactly
     assert(Kernels.kmvEst(Long.MinValue, 100) == 198L)

@@ -67,6 +67,16 @@ class PipJoinRewriteSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
+  test("rewrite fails loudly on a polygon whose cover would coarsen") {
+    val rect = Seq((0L, Wkb.write(Wkt.parse("POLYGON ((-170 -80, 170 -80, 170 80, -170 80, -170 -80))"))))
+      .toDF("poly_id", "geom")
+    val e = intercept[Exception] {
+      points(200).join(rect, st.contains(col("geom"), col("lon"), col("lat"))).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("exceeds maxCells")))
+  }
+
   test("SQL functions injected by the extension alone") {
     val r = spark.sql("SELECT st_cellid(1.0d, 2.0d, 5) c, " +
       "st_aswkt(st_geomfromwkt('POINT (1 2)')) w, " +

@@ -155,6 +155,38 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(selected < total, s"compacted manifest skipped no files ($selected of $total)")
   }
 
+  test("manifest bounds above 2^60 are exact: readRange finds every file-edge cell") {
+    val dir = freshDir()
+    // res-7 cell ids are > 2^60: as JSON doubles they rounded to multiples of 256
+    val df = spark.range(0, 20000, 1, 8)
+      .select(col("id"),
+        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
+        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
+      .select(col("id"), st.cellId(col("lon"), col("lat"), 7).as("bucket"))
+    assert(SnapshotTable.commitBatch(df, dir, "b0", "bucket", Seq("id"),
+      numPartitions = 8, zOrderRes = 7))
+    val counts = df.groupBy("bucket").count().as[(Long, Long)].collect().toMap
+    val stats = SnapshotTable.currentSnapshot(dir).batches.head.fileStats.filter(_.rows > 0)
+    assert(stats.size > 1 && stats.forall(_.minBucket > (1L << 60)))
+    assert(SnapshotTable.currentSnapshot(dir).batches.head.buckets.forall(b => counts.contains(b.bucket)))
+    stats.flatMap(fs => Seq(fs.minBucket, fs.maxBucket)).foreach { c =>
+      assert(counts.contains(c), s"recorded bound $c is no bucket of the table")
+      val (frame, _, _) = SnapshotTable.readRange(spark, dir, c, c)
+      assert(frame.filter(col("bucket") === c).count() == counts(c), s"cell $c")
+    }
+    // an older manifest stored the bounds as JSON numbers: they are not
+    // trusted, so every file is read
+    val snapDir = java.nio.file.Paths.get(dir, "snapshots")
+    val v = SnapshotTable.currentVersion(dir)
+    val path = snapDir.resolve(s"v$v.json")
+    Files.writeString(path,
+      Files.readString(path).replaceAll("\"(minBucket|maxBucket)\":\\s*\"(\\d+)\"", "\"$1\":$2"))
+    val c = stats.head.minBucket
+    val (frame, selected, total) = SnapshotTable.readRange(spark, dir, c, c)
+    assert(selected == total)
+    assert(frame.filter(col("bucket") === c).count() == counts(c))
+  }
+
   test("optimistic concurrency: racing committers all land, none clobbered") {
     // three writer entry points exist (commitBatch / streamingCommit /
     // compact) — publish must CAS on the version file, not blindly
