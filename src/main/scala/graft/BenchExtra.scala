@@ -34,19 +34,26 @@ object BenchExtra {
     try SparkEntry.prepare(spark, sfDir)
     catch { case _: Throwable => () }
     finally graft.operators.CacheTracker.releaseAll()
+    // a repeat that throws records no sample (its short elapsed time is not
+    // a measurement); the query's entry then carries the error, not a min
     val results = ordered.map { case (name, fn) =>
-      val ts = (0 until repeats).map { _ =>
+      var error: Option[String] = None
+      val ts = (0 until repeats).flatMap { _ =>
         val t0 = System.nanoTime()
         spark.sparkContext.setJobDescription(name)
-        try fn(spark, sfDir).count()
-        catch { case t: Throwable => println(s"ERROR $name: ${t.getMessage}") }
-        finally graft.operators.CacheTracker.releaseAll()
-        (System.nanoTime() - t0) / 1e9
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case t: Throwable =>
+            println(s"ERROR $name: ${t.getMessage}")
+            error = Some(String.valueOf(t.getMessage)); false }
+          finally graft.operators.CacheTracker.releaseAll()
+        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }
-      (name, ts)
+      (name, ts, error)
     }
-    val qs = results.map { case (k, ts) =>
-      s"\"$k\":{\"min\":${ts.min},\"samples\":[${ts.mkString(",")}]}"
+    val qs = results.map { case (k, ts, error) =>
+      val head = error.fold(s"\"min\":${ts.min}")(e => s"\"error\":${graft.core.Json.escape(e)}")
+      s"\"$k\":{$head,\"samples\":[${ts.mkString(",")}]}"
     }.mkString("{", ",", "}")
     println(s"""{"metric":"benchx","repeats":$repeats,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()

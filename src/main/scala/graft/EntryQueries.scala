@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -20,10 +21,17 @@ import graft.sources.ImageTable
   */
 object EntryQueries {
 
+  /** Registers the st / codec / img function groups on `spark`, each only
+    * if the session does not have it yet: every query body calls this, and
+    * re-registering replaces each function with a WARN line. A group
+    * registers all of its names together, so one of them marks it. */
   def ensureRegistered(spark: SparkSession): Unit = {
-    st.registerAll(spark)
-    graft.functions.codecs.registerAll(spark)
-    ImageTable.registerUdfs(spark)
+    val reg = spark.sessionState.functionRegistry
+    def once(marker: String)(register: SparkSession => Unit): Unit =
+      if (!reg.functionExists(FunctionIdentifier(marker))) register(spark)
+    once("st_cellid")(st.registerAll)
+    once("kml_to_geojson")(graft.functions.codecs.registerAll)
+    once("img_phash")(ImageTable.registerUdfs)
   }
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -666,16 +674,25 @@ object EntryQueries {
     * backfills one job's straggler tail with the next job's tasks; FIFO
     * default is exactly the desired behavior). Job descriptions and other
     * thread-locals are per-thread, so concurrent jobs stay labeled.
-    * Exceptions rethrow the first cause. */
-  private def runConcurrently(n: Int)(body: Int => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    * The first failure (in completion order) interrupts the siblings and
+    * waits for every body to exit before its cause is rethrown, so no batch
+    * commit of a failed fixture outlives the call. */
+  private[graft] def runConcurrently(n: Int)(body: Int => Unit): Unit = {
+    import java.util.concurrent._
+    val pool = Executors.newFixedThreadPool(n)
+    val done = new ExecutorCompletionService[Unit](pool)
     try {
       val futs = (0 until n).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = body(i) })
+        done.submit(new Callable[Unit] { def call(): Unit = body(i) })
       }
-      futs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      (0 until n).foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException =>
+          futs.foreach(_.cancel(true))
+          pool.shutdownNow()
+          pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+          throw e.getCause
+        }
       }
     } finally { pool.shutdown(); () }
   }

@@ -24,12 +24,23 @@ import org.apache.spark.sql.expressions.Window
   *    distinguish "no near-dups" from "all buckets dropped" should lower
   *    `maxBucket` expectations or count oversized buckets directly
   *    (`groupBy(band, hash).count.filter(_ > maxBucket)`) on their corpus;
-  *  - IN-cap buckets never concentrate work either: [[simhashPairs]] and
-  *    the embedding near-dup generate pairs through [[chunkPairRows]], so
-  *    per-row and per-task pair volume is bounded by `chunkSize²`
-  *    regardless of bucket size (a 64k-member in-cap bucket becomes
-  *    C(128,2)+128 ≈ 8k distributable chunk-pair rows, not one 2·10⁹-pair
-  *    row).
+  *  - IN-cap buckets never concentrate work either: pairs are generated
+  *    through [[chunkPairRows]], so per-row and per-task pair volume is
+  *    bounded by `chunkSize²` regardless of bucket size (a 64k-member
+  *    in-cap bucket becomes C(128,2)+128 ≈ 8k distributable chunk-pair
+  *    rows, not one 2·10⁹-pair row).
+  *
+  * These contracts live in ONE place, the private banded-candidate core
+  * `bandedPairs` shared by MinHash ([[minhashCandidates]]), the
+  * pigeonhole-Hamming engine ([[hammingPairs64]]) and the embedding
+  * near-dup: it persists the signatures, counts the (band, hash)
+  * histogram, applies the cap, picks the chunked branch and reports the
+  * drop count. The families add only their signature, band layout and
+  * verification. `bucketStats`' precondition — counts taken over a
+  * persisted, deterministic signature frame, since its driver-side numbers
+  * gate which pairs survive — is met there, by the core owning the
+  * persist. ([[decontaminateLarge]] keeps its own cross-side banding: its
+  * over-cap buckets fail safe instead of being dropped.)
   */
 object Dedup {
 
@@ -98,12 +109,18 @@ object Dedup {
     * runtime plan choices that a lazy plan cannot make: (a) skip the
     * chunked pair machinery when no in-cap bucket exceeds the chunk size —
     * the overwhelmingly common shape — and (b) attach `n_dropped_buckets`
-    * as a literal instead of a broadcast cross-join. `counts` derives from
-    * the operator's persisted signature frame, so the extra pass re-runs
+    * as a literal instead of a broadcast cross-join. The extra pass re-runs
     * one map-side-combined count aggregation over cached signatures — a
     * few percent of the operator's cost at any scale, bought back by the
     * three exchanges (and their serialized AQE rounds) the common case no
-    * longer plans. */
+    * longer plans.
+    *
+    * Precondition: `counts` must derive from a PERSISTED, deterministic
+    * signature frame. The two numbers are frozen driver-side and gate
+    * correctness — `smallOnly` drops buckets above the chunk size and
+    * `nDropped == 0` enables the first-agreeing-band dedup — so a recompute
+    * that disagreed with them would lose pairs while reporting no drops.
+    * [[bandedPairs]], its only caller, meets it by owning the persist. */
   private def bucketStats(counts: DataFrame, maxBucket: Int): (Long, Long) = {
     val r = counts.agg(
       count(when(col("__bn") > maxBucket, 1)).as("nd"),
@@ -111,20 +128,78 @@ object Dedup {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** [[chunkPairRows]] → exploded (a, b) payload pairs, each unordered pair
-    * exactly once per bucket (intra-chunk: strict upper triangle;
+  /** [[chunkPairRows]] → exploded (band, a, b) payload pairs, each unordered
+    * pair exactly once per bucket (intra-chunk: strict upper triangle;
     * inter-chunk: full cross product — chunks partition the bucket). */
-  private def chunkedBucketPairs(
-      kept: DataFrame, keyCols: Seq[String], chunkSize: Int,
-      smallOnly: Boolean = false, carry: Seq[String] = Nil): DataFrame =
-    chunkPairRows(kept, keyCols, chunkSize, smallOnly)
-      .select(carry.map(col) :+ explode(when(col("__cka") === col("__ckb"),
+  private def chunkedBucketPairs(kept: DataFrame, chunkSize: Int, smallOnly: Boolean): DataFrame =
+    chunkPairRows(kept, Seq("band", "bh"), chunkSize, smallOnly)
+      .select(col("band"), explode(when(col("__cka") === col("__ckb"),
           expr(
             """flatten(transform(__xa, (x, i) ->
               |  transform(slice(__xa, i + 2, size(__xa) - i - 1), y -> struct(x AS a, y AS b))))""".stripMargin))
         .otherwise(
-          expr("flatten(transform(__xa, x -> transform(__xb, y -> struct(x AS a, y AS b))))"))).as("p"): _*)
-      .select(carry.map(col) ++ Seq(col("p.a").as("a"), col("p.b").as("b")): _*)
+          expr("flatten(transform(__xa, x -> transform(__xb, y -> struct(x AS a, y AS b))))"))).as("p"))
+      .select(col("band"), col("p.a").as("a"), col("p.b").as("b"))
+
+  /** THE banded-candidate core of the LSH family ([[minhashCandidates]],
+    * [[hammingPairs64]], [[embeddingNearDup]]): persist the signature frame
+    * `sigs`, explode `bandArray` (one value per band, over `sigs`' columns)
+    * into (band, bh) buckets, count the histogram, cap it at `maxBucket`
+    * and pair each in-cap bucket's `payload` structs (id first) through
+    * the bounded chunk generator. Returns the bucket pairs (band, a, b)
+    * with a.id < b.id — a pair agreeing on several bands appears once per
+    * band — the number of dropped buckets, and the persisted frame for the
+    * caller's verify joins. Payloads stay skinny (ids and 64-bit
+    * signatures): wide values such as the MinHash signature or an
+    * embedding join back onto the pair set instead of riding every
+    * bucket's shuffle. */
+  private def bandedPairs(
+      sigs: DataFrame, bandArray: Column, payload: Seq[String],
+      maxBucket: Int, chunkSize: Int): (DataFrame, Long, DataFrame) = {
+    val persisted = CacheTracker.register(
+      sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val banded = persisted.select(
+      payload.map(col) :+ posexplode(bandArray).as(Seq("band", "bh")): _*)
+    // count first: the (band, bh) histogram decides which buckets survive
+    // the cap; both aggregations shuffle on the same key, so AQE reuses the
+    // exchange and the oversized buckets never reach collect_list
+    val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
+    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
+    val kept = banded
+      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
+      .select(col("band"), col("bh"), col("__bn"), struct(payload.map(col): _*).as("x"))
+    (chunkedBucketPairs(kept, chunkSize, smallOnly = maxInCap <= chunkSize), nDropped, persisted)
+  }
+
+  /** Bits [off, off + width) of a 64-bit signature, for each (off, width)
+    * of `layout` — the band values of the pigeonhole blocks, the embedding
+    * bands and [[graft.streaming.StreamingDedup]]. */
+  private[graft] def bitBands(sig: Column, layout: Seq[(Int, Int)]): Column =
+    array(layout.map(bitBand(sig, _)): _*)
+
+  private def bitBand(sig: Column, band: (Int, Int)): Column = {
+    val (off, w) = band
+    shiftrightunsigned(sig, off).bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1L))
+  }
+
+  /** Cross-band dedup of [[bandedPairs]] output over bit bands: (id_a, id_b,
+    * `extra`...) once per pair. When NO bucket was dropped (known
+    * driver-side; the overwhelmingly common shape), every agreeing band's
+    * bucket is present, so each pair is kept ONLY in its FIRST agreeing
+    * band — a per-row predicate on the two signatures (the StreamingDedup
+    * rule) instead of a shuffle of all candidate pairs. With drops, a
+    * pair's first agreeing band may be the dropped one while a later band
+    * survived, so the pairs are grouped instead. */
+  private def oncePerPair(
+      pairs: DataFrame, layout: Seq[(Int, Int)], nDropped: Long, extra: Column*): DataFrame = {
+    val out = Seq(col("a.id").as("id_a"), col("b.id").as("id_b")) ++ extra
+    if (nDropped == 0) {
+      val firstAgree = layout.zipWithIndex.foldRight(lit(-1): Column) { case ((band, i), els) =>
+        when(bitBand(col("a.sig"), band) === bitBand(col("b.sig"), band), lit(i)).otherwise(els)
+      }
+      pairs.filter(col("band") === firstAgree).select(out: _*)
+    } else pairs.select(out: _*).dropDuplicates("id_a", "id_b")
+  }
 
   /** Exact dedup on a content column: keeps the first row (min of `keep`)
     * per distinct content hash. Map-side partial aggregation; one shuffle. */
@@ -189,30 +264,16 @@ object Dedup {
       shingleLen: Int = 4, bands: Int = 8, rowsPerBand: Int = 4,
       minBands: Int = 2, minSigFrac: Double = 0.35,
       maxBucket: Int = 4096, chunkSize: Int = DefaultChunkSize): DataFrame = {
-    // the signature frame feeds the banding plus the two estimate joins —
-    // cache it or the per-doc MinHash kernel runs 3x. (A/B rejected the
+    val perms = bands * rowsPerBand
+    // the persisted signature frame feeds the banding plus the two estimate
+    // joins, so the per-doc MinHash kernel runs once. (A/B rejected the
     // carry-sig-in-the-bucket-struct alternative: the 32-long payload rides
     // the (band,bh) shuffle bands× per doc — ~3× the shuffled bytes of the
     // skinny banding + two sig joins, and measurably slower at sf0.1.)
-    val sig = df.select(id.as("id"), minhash(text, shingleLen, bands * rowsPerBand).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheTracker.register(sig)
-    val banded = sig.select(col("id"),
-      posexplode(bandHashArray(col("sig"), bands, rowsPerBand)).as(Seq("band", "bh")))
-    // count first: the (band,bh) histogram decides which buckets survive the
-    // cap; both aggregations shuffle on the same key, so AQE reuses the
-    // exchange and the oversized buckets never reach collect_list.
-    val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
-    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
-    // bucket-and-pair instead of a self-join: one shuffle on (band, bh),
-    // ids collected per bucket (sorted for determinism), pairs exploded
-    // in-bucket — through the bounded chunk generator, so even an at-cap
-    // bucket never materializes more than chunkSize² pairs per row/task.
-    val kept = banded
-      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
-      .select(col("band"), col("bh"), col("__bn"), struct(col("id")).as("x"))
-    val pairs = chunkedBucketPairs(kept, Seq("band", "bh"), chunkSize,
-        smallOnly = maxInCap <= chunkSize)
+    val (bucketPairs, nDropped, sig) = bandedPairs(
+      df.select(id.as("id"), minhash(text, shingleLen, perms).as("sig")),
+      bandHashArray(col("sig"), bands, rowsPerBand), Seq("id"), maxBucket, chunkSize)
+    val pairs = bucketPairs
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_bands_matched"))
@@ -221,7 +282,6 @@ object Dedup {
       .filter(col("n_bands_matched") >= minBands)
     // pass 2: cheap jaccard estimate from full signatures (32 comparisons)
     // before the expensive exact shingle-set verification
-    val perms = bands * rowsPerBand
     pairs
       .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
@@ -497,10 +557,7 @@ object Dedup {
     // near-empty blocks pays that many task launches per pass per scan. The
     // count is one cheap action on the already-persisted projection; at
     // scale (≥ ~500k edges/partition) this keeps the session's parallelism.
-    val tE = System.nanoTime()
     val nEdges = e.count()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] edges count ${(System.nanoTime() - tE) / 1e9}%.2f s n=$nEdges")
     val parts = math.max(1L, math.min(
       pairs.sparkSession.sparkContext.defaultParallelism.toLong,
       nEdges / 500000L + 1L)).toInt
@@ -533,14 +590,10 @@ object Dedup {
     // in-loop the sum comparison is exact: comp values are element-wise
     // non-increasing, so equal sums ⟺ no label changed. Only the empty
     // graph needs a separate check (its sum is vacuously stable).
-    val tI = System.nanoTime()
     var prevSum = labelSum(labels)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] init labels ${(System.nanoTime() - tI) / 1e9}%.2f s")
     var iter = 0
     var converged = nEdges == 0L
     while (!converged && iter < maxIters) {
-      val tP = System.nanoTime()
       val msgs = bidir.as("e").join(labels.as("l"), col("e.src") === col("l.id"))
         .select(col("e.dst").as("id"), col("l.comp"))
       val stepped = labels.unionByName(msgs)
@@ -570,12 +623,14 @@ object Dedup {
         .select(col("id"),
           least(col("comp"), coalesce(col("__pcomp"), col("comp"))).as("comp"))
         .localCheckpoint(false)
+      // unpersist() on a lazily local-checkpointed frame is best effort (a
+      // no-op today): the ContextCleaner reclaims the checkpoint blocks
+      // once the frame is unreachable. It must stay that way here — the
+      // labelSum action below is what materializes `next`, and it still
+      // reads `stepped`'s checkpoint blocks, which have no lineage to
+      // recompute from.
       stepped.unpersist()
-      val t0 = System.nanoTime()
       val s = labelSum(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] pass ${iter + 1} total ${(System.nanoTime() - tP) / 1e9}%.2f " +
-          f"(sum-action ${(System.nanoTime() - t0) / 1e9}%.2f) s sum=$s")
       labels.unpersist()
       labels = next
       converged = s.compareTo(prevSum) == 0
@@ -723,12 +778,6 @@ object Dedup {
       chunkSize: Int = DefaultChunkSize): DataFrame =
     hammingPairs64(df, id, simhash(text), maxHamming, maxBucket, chunkSize)
 
-  /** Near-dup pairs at Hamming distance ≤ `maxHamming` over ANY precomputed
-    * 64-bit signature column (SimHash, image perceptual hash, …) — the
-    * pigeonhole-block engine behind [[simhashPairs]], exposed so other
-    * modalities reuse the same bounded-bucket machinery. Returns
-    * (id_a, id_b, hamming, n_dropped_buckets), id_a < id_b.
-    */
   /** (offset, width) of each pigeonhole block for `maxHamming + 1` blocks —
     * widths as equal as possible, first (64 % blocks) blocks get the extra
     * bit. THE single definition of the block layout: the batch engine below
@@ -742,62 +791,24 @@ object Dedup {
     Array.tabulate(blocks)(b => (offsets(b), widths(b)))
   }
 
+  /** Near-dup pairs at Hamming distance ≤ `maxHamming` over ANY precomputed
+    * 64-bit signature column (SimHash, image perceptual hash, …) — the
+    * pigeonhole-block engine behind [[simhashPairs]], exposed so other
+    * modalities reuse the same bounded-bucket machinery. Returns
+    * (id_a, id_b, hamming, n_dropped_buckets), id_a < id_b.
+    */
   def hammingPairs64(
       df: DataFrame, id: Column, sig64: Column,
       maxHamming: Int = 3, maxBucket: Int = 65536,
       chunkSize: Int = DefaultChunkSize): DataFrame = {
     val layout = pigeonholeLayout(maxHamming)
-    val blocks = layout.length
-    // the banded frame feeds the count histogram plus both chunk branches —
-    // persist the signatures so the signature kernel runs once per doc
-    val sigs = df.select(id.as("id"), sig64.as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheTracker.register(sigs)
-    val banded = sigs.select(col("id"), col("sig"), posexplode(
-      array((0 until blocks).map { b =>
-        val (off, w) = layout(b)
-        val mask = if (w == 64) -1L else (1L << w) - 1L
-        shiftrightunsigned(col("sig"), off).bitwiseAND(lit(mask))
-      }: _*)).as(Seq("band", "bh")))
-    val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
-    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
-    val kept = banded
-      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
-      .select(col("band"), col("bh"), col("__bn"), struct(col("id"), col("sig")).as("x"))
-    val smallOnly = maxInCap <= chunkSize
-    val ham = hamming(col("a.sig"), col("b.sig")).cast("long")
-    // cross-block dedup: a pair within the Hamming bound can agree on (and
-    // surface from) several blocks. When NO bucket was dropped (known
-    // driver-side from bucketStats; the overwhelmingly common shape), every
-    // agreeing block's bucket is present, so each pair is kept ONLY where
-    // its bucket's block == the pair's FIRST agreeing block — a pure
-    // per-row predicate on the two signatures (the StreamingDedup rule),
-    // replacing a full shuffle of all candidate pairs with a map-side
-    // filter. With drops, a pair's first agreeing block may be the dropped
-    // one while a later block survived — only the groupBy dedup preserves
-    // those pairs, so the drop path keeps it.
-    val deduped =
-      if (nDropped == 0) {
-        val firstBlk = layout.zipWithIndex.foldRight(lit(-1): Column) {
-          case (((off, w), i), els) =>
-            val mask = if (w == 64) -1L else (1L << w) - 1L
-            when(shiftrightunsigned(col("a.sig"), off).bitwiseAND(lit(mask)) ===
-                 shiftrightunsigned(col("b.sig"), off).bitwiseAND(lit(mask)), lit(i))
-              .otherwise(els)
-        }
-        chunkedBucketPairs(kept, Seq("band", "bh"), chunkSize, smallOnly,
-            carry = Seq("band"))
-          .filter(col("band") === firstBlk)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"), ham.as("__h"))
-      } else
-        chunkedBucketPairs(kept, Seq("band", "bh"), chunkSize, smallOnly)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"), ham.as("__h"))
-          .groupBy("id_a", "id_b")
-          .agg(first(col("__h")).as("__h"))
-    deduped
+    val (bucketPairs, nDropped, _) = bandedPairs(df.select(id.as("id"), sig64.as("sig")),
+      bitBands(col("sig"), layout), Seq("id", "sig"), maxBucket, chunkSize)
+    oncePerPair(bucketPairs, layout, nDropped,
+        hamming(col("a.sig"), col("b.sig")).cast("long").as("__h"))
       .filter(col("__h") <= maxHamming)
-      // when() keeps the column nullable like the first() aggregate it
-      // replaces — the gate compares schemas, not just values
+      // when() keeps the column nullable like the drop path's first()
+      // aggregate — the gate compares schemas, not just values
       .select(col("id_a"), col("id_b"),
         when(col("__h") >= 0, col("__h")).as("hamming"))
       .withColumn("n_dropped_buckets", lit(nDropped))
@@ -853,52 +864,15 @@ object Dedup {
       chunkSize: Int = DefaultChunkSize): DataFrame = {
     require(planes % bands == 0 && planes <= 64, "planes must be ≤64 and divisible by bands")
     val width = planes / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1L
-    val sigExpr = Ann.hyperplaneSig(emb, planes)
-    // the embedding frame feeds banding plus the two verification joins —
-    // persist it so the hyperplane signatures run once
-    val sigs = df.select(id.as("id"), emb.as("emb"), sigExpr.as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheTracker.register(sigs)
-    val banded = sigs.select(col("id"), col("sig"), posexplode(
-      array((0 until bands).map(b =>
-        shiftrightunsigned(col("sig"), b * width).bitwiseAND(lit(mask))): _*))
-      .as(Seq("band", "bv")))
-    val counts = banded.groupBy("band", "bv").agg(count(lit(1)).as("__bn"))
-    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
-    // pairs are generated id+sig-only through bounded chunk rows (the
-    // EMBEDDINGS would multiply the chunk payload by the vector width;
-    // joining them back onto the deduplicated pair set is the
-    // skinny-shuffle shape — the 64-bit sig rides along because the
-    // first-agreeing-band dedup below reads it, 8 bytes/row, nothing like
-    // the r4-rejected 32-long MinHash payload), so an in-cap hot bucket
-    // costs chunkSize²-pair tasks, never one mega-row
-    val kept = banded
-      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bv"))
-      .select(col("band"), col("bv"), col("__bn"), struct(col("id"), col("sig")).as("x"))
-    val smallOnly = maxInCap <= chunkSize
-    // cross-band dedup, as in hammingPairs64: with no dropped buckets each
-    // pair is kept only in its FIRST agreeing band (map-side predicate on
-    // the two sigs); with drops the groupBy dedup preserves pairs whose
-    // first agreeing band was the dropped one
-    val deduped =
-      if (nDropped == 0) {
-        val firstBand = (0 until bands).foldRight(lit(-1): Column) { (b, els) =>
-          when(shiftrightunsigned(col("a.sig"), b * width).bitwiseAND(lit(mask)) ===
-               shiftrightunsigned(col("b.sig"), b * width).bitwiseAND(lit(mask)), lit(b))
-            .otherwise(els)
-        }
-        chunkedBucketPairs(kept, Seq("band", "bv"), chunkSize, smallOnly,
-            carry = Seq("band"))
-          .filter(col("band") === firstBand)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      } else
-        chunkedBucketPairs(kept, Seq("band", "bv"), chunkSize, smallOnly)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .groupBy("id_a", "id_b")
-          .agg(count(lit(1)).as("__nb"))
-          .drop("__nb")
-    val cand = deduped
+    val layout = Array.tabulate(bands)(b => (b * width, width))
+    // the embeddings stay in the persisted frame, out of the bucket struct
+    // (they would multiply the chunk payload by the vector width) and are
+    // joined back onto the deduplicated pair set; the 64-bit sig rides
+    // along because the first-agreeing-band dedup reads it
+    val (bucketPairs, nDropped, sigs) = bandedPairs(
+      df.select(id.as("id"), emb.as("emb"), Ann.hyperplaneSig(emb, planes).as("sig")),
+      bitBands(col("sig"), layout), Seq("id", "sig"), maxBucket, chunkSize)
+    val cand = oncePerPair(bucketPairs, layout, nDropped)
       .join(sigs.select(col("id").as("id_a"), col("emb").as("emb_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("emb").as("emb_b")), "id_b")
     verify(cand.withColumn(scoreName, score(col("emb_a"), col("emb_b"))))

@@ -87,11 +87,8 @@ object StreamingDedup {
     val events = df
       .select(id.cast("long").as("id"), sig64.cast("long").as("sig"),
         eventTime.cast("timestamp").as("ts"))
-      .select(col("id"), col("sig"), col("ts"), posexplode(
-        array(layout.map { case (off, w) =>
-          shiftrightunsigned(col("sig"), off)
-            .bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1L))
-        }: _*)).as(Seq("band", "bv")))
+      .select(col("id"), col("sig"), col("ts"),
+        posexplode(graft.operators.Dedup.bitBands(col("sig"), layout)).as(Seq("band", "bv")))
       .withWatermark("ts", watermark)
       .as[SigEvent]
 

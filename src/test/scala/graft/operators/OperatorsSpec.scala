@@ -518,6 +518,26 @@ class DedupAnnSpec extends AnyFunSuite {
     val corpus = base.unionAll(aug).cache()
     val got = Dedup.embeddingNearDupQuantized(corpus, col("vec_id"), col("emb"))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    // chunkSize 16: the corpus' buckets hold at most a few vectors, so 24
+    // positive rescalings of vector 0 (same signature) add a 25-member
+    // bucket to every band, which takes the chunked branch; the pair set
+    // must not depend on the branch
+    val cluster = base.filter(col("vec_id") === 0).crossJoin(spark.range(1, 25))
+      .select((col("id") + 2000000L).as("vec_id"),
+        transform(col("emb"), x => x * (col("id") / 1000.0 + 1.0)).as("emb"))
+    val withCluster = corpus.unionAll(cluster)
+    val largest = withCluster
+      .select(posexplode(Dedup.bitBands(Ann.hyperplaneSig(col("emb"), 64),
+        Seq(0 -> 16, 16 -> 16, 32 -> 16, 48 -> 16))).as(Seq("band", "bv")))
+      .groupBy("band", "bv").count().agg(max("count")).head().getLong(0)
+    assert(largest > 16, s"largest bucket $largest never reaches the chunked branch")
+    val byChunk = Seq(Dedup.DefaultChunkSize, 16).map { chunk =>
+      Dedup.embeddingNearDupQuantized(withCluster, col("vec_id"), col("emb"), chunkSize = chunk)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    }
+    assert(byChunk(1) == byChunk(0),
+      s"chunked: missing=${byChunk(0) -- byChunk(1)} extra=${byChunk(1) -- byChunk(0)}")
+    assert(got.subsetOf(byChunk(0)) && byChunk(0).size >= got.size + 25 * 24 / 2)
     // brute: every pair passing the exact quantized predicate (no LSH)
     val qv = corpus.select(col("vec_id"),
       transform(col("emb"), x => round(x * 1000).cast("long")).as("q"))
@@ -531,6 +551,53 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(got.subsetOf(brute), s"false positives: ${got -- brute}")
     assert(got.size >= (brute.size * 9) / 10, s"recall ${got.size}/${brute.size} < 0.9")
     assert(brute.size >= 45, s"expected ~50 planted near-dup pairs, brute found ${brute.size}")
+  }
+
+  test("embedding near-dup drop path keeps a pair whose FIRST agreeing band's bucket was dropped") {
+    // 8 planes in 2 bands of 4 bits. Pair (1,2): identical vectors, so they
+    // agree on both bands. 200 flood vectors share the pair's band-0 value,
+    // so band 0's bucket (202 members) is dropped at maxBucket = 100, while
+    // band 1 spreads the flood over 16 values. The first-agreeing-band
+    // dedup would assign the pair to the dropped band 0 and lose it — the
+    // engine must see the drop and emit the pair exactly once via band 1.
+    val vecs = spark.range(20000).select(col("id"),
+      array((0 until 16).map(j =>
+        (pmod(st.mix64(col("id") * 31 + j), lit(2001L)) - 1000).cast("double") / 1000.0): _*)
+        .as("emb"))
+      .withColumn("b0", Ann.hyperplaneSig(col("emb"), 8).bitwiseAND(0xFL))
+      .cache()
+    val pairB0 = vecs.filter(col("id") === 0).head().getAs[Long]("b0")
+    val pair = vecs.filter(col("id") === 0)
+      .select(explode(array(lit(1L), lit(2L))).as("id"), col("emb"))
+    val flood = vecs.filter(col("id") > 0 && col("b0") === pairB0).orderBy("id").limit(200)
+      .select((col("id") + 100L).as("id"), col("emb"))
+    assert(flood.count() == 200L)
+    for (maxBucket <- Seq(100, 65536)) {
+      val out = Dedup.embeddingNearDup(pair.unionByName(flood), col("id"), col("emb"),
+          planes = 8, bands = 2, maxBucket = maxBucket)
+        .select("id_a", "id_b", "n_dropped_buckets").as[(Long, Long, Long)].collect()
+      CacheTracker.releaseAll()
+      assert(out.count(p => p._1 == 1L && p._2 == 2L) == 1,
+        s"maxBucket=$maxBucket: pair (1,2) must appear exactly once: ${out.toSeq}")
+      val dropped = if (maxBucket == 100) 1L else 0L
+      assert(out.forall(_._3 == dropped), s"maxBucket=$maxBucket: ${out.toSeq}")
+    }
+    vecs.unpersist()
+  }
+
+  test("chunked pairs == unchunked: minhash candidates invariant under chunkSize") {
+    // 40 identical docs put one 40-member bucket in every band, above
+    // chunkSize 16; n_bands_matched and sig_frac must not change
+    val same = spark.range(40).select((col("id") + 10000L).as("doc_id"),
+      lit("the very same paragraph of boilerplate in forty documents").as("text"))
+    val d = docs(150).unionByName(same).cache()
+    val byChunk = Seq(Dedup.DefaultChunkSize, 16).map { chunk =>
+      Dedup.minhashCandidates(d, col("doc_id"), col("text"), chunkSize = chunk)
+        .as[(Long, Long, Long, Double, Long)].collect().toSet
+    }
+    assert(byChunk(1) == byChunk(0),
+      s"missing=${byChunk(0) -- byChunk(1)} extra=${byChunk(1) -- byChunk(0)}")
+    assert(byChunk(0).count(p => p._1 >= 10000L && p._2 >= 10000L) == 40 * 39 / 2)
   }
 
   test("ivf ANN recall vs brute force >= 0.4 at probes=2") {
