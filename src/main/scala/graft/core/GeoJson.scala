@@ -60,24 +60,32 @@ object GeoJson {
 
   // ---- JSON -> Geom ----
 
+  /** A value as an error message names it: containers by kind only, since
+    * printing a deeply nested one would overflow the stack. */
+  private def kind(v: JValue): String = v match {
+    case _: JArr => "an array"
+    case _: JObj => "an object"
+    case other   => other.toString.take(64)
+  }
+
   private def asNum(v: JValue): Double = v match {
     case JNum(d) => d
-    case other   => throw new IllegalArgumentException(s"geojson: expected number, got $other")
+    case other   => throw new IllegalArgumentException(s"geojson: expected number, got ${kind(other)}")
   }
 
   private def parsePt(v: JValue): Pt = v match {
     case JArr(items) if items.length >= 2 => Pt(asNum(items(0)), asNum(items(1)))
-    case other => throw new IllegalArgumentException(s"geojson: bad position $other")
+    case other => throw new IllegalArgumentException(s"geojson: bad position ${kind(other)}")
   }
 
   private def parseLine(v: JValue): Vector[Pt] = v match {
     case JArr(items) => items.map(parsePt)
-    case other => throw new IllegalArgumentException(s"geojson: bad line $other")
+    case other => throw new IllegalArgumentException(s"geojson: bad line ${kind(other)}")
   }
 
   private def parseRings(v: JValue): Vector[Vector[Pt]] = v match {
     case JArr(items) => items.map(parseLine)
-    case other => throw new IllegalArgumentException(s"geojson: bad rings $other")
+    case other => throw new IllegalArgumentException(s"geojson: bad rings ${kind(other)}")
   }
 
   def geomFromJson(v: JValue): Geom = v match {
@@ -91,15 +99,15 @@ object GeoJson {
         case JStr("Polygon")         => GPolygon(parseRings(coords))
         case JStr("MultiPolygon") => GMultiPolygon(coords match {
           case JArr(items) => items.map(parseRings)
-          case other => throw new IllegalArgumentException(s"geojson: bad multipolygon $other")
+          case other => throw new IllegalArgumentException(s"geojson: bad multipolygon ${kind(other)}")
         })
         case JStr("GeometryCollection") => GCollection(o("geometries") match {
           case JArr(items) => items.map(geomFromJson)
-          case other => throw new IllegalArgumentException(s"geojson: bad collection $other")
+          case other => throw new IllegalArgumentException(s"geojson: bad collection ${kind(other)}")
         })
-        case t => throw new IllegalArgumentException(s"geojson: unknown type $t")
+        case t => throw new IllegalArgumentException(s"geojson: unknown type ${kind(t)}")
       }
-    case other => throw new IllegalArgumentException(s"geojson: expected object, got $other")
+    case other => throw new IllegalArgumentException(s"geojson: expected object, got ${kind(other)}")
   }
 
   def featureFromJson(v: JValue): Feature = v match {
@@ -122,7 +130,7 @@ object GeoJson {
         case _ => None
       }
       Feature(geom, props, style, bbox)
-    case other => throw new IllegalArgumentException(s"geojson: expected feature, got $other")
+    case other => throw new IllegalArgumentException(s"geojson: expected feature, got ${kind(other)}")
   }
 
   def collectionFromJson(v: JValue): FeatureCollection = v match {
@@ -142,9 +150,9 @@ object GeoJson {
         case JStr("Feature") => FeatureCollection(Vector(featureFromJson(o)))
         // bare geometry auto-wrap, matching `KML.js:440-446`
         case JStr(_) => FeatureCollection(Vector(Feature(Some(geomFromJson(o)))))
-        case t => throw new IllegalArgumentException(s"geojson: unknown root $t")
+        case t => throw new IllegalArgumentException(s"geojson: unknown root ${kind(t)}")
       }
-    case other => throw new IllegalArgumentException(s"geojson: expected object, got $other")
+    case other => throw new IllegalArgumentException(s"geojson: expected object, got ${kind(other)}")
   }
 
   def read(s: String): FeatureCollection = collectionFromJson(Json.parse(s))

@@ -126,13 +126,35 @@ object Json {
     sb.toString
   }
 
+  /** Deepest container nesting the parser accepts; the root container is at
+    * depth 1. Deeper input is malformed (IllegalArgumentException) instead
+    * of a StackOverflowError. Jackson's default read limit is the same. */
+  val MaxDepth = 1000
+
   /** Recursive-descent parser. Throws IllegalArgumentException on bad input. */
-  def parse(s: String): JValue = {
-    val p = new Parser(s)
+  def parse(s: String): JValue = parseWith(new Parser(s, strict = false))
+
+  /** [[parse]] restricted to input that Jackson, as Spark's JSON functions
+    * configure it, reads too: RFC 8259 number lexemes (no `01`, `1.`, `-.5`)
+    * of at most 1000 characters, `\u` escapes of exactly four hex digits,
+    * and string lexemes of at most 50,000 characters (Jackson's default
+    * number and name length limits). Rejects a subset of what [[parse]]
+    * accepts and returns the same tree for the rest. */
+  def parseStrict(s: String): JValue = parseWith(new Parser(s, strict = true))
+
+  private def parseWith(p: Parser): JValue = {
     val v = p.parseValue()
     p.skipWs()
     if (!p.eof) fail(s"trailing content at ${p.pos}")
     v
+  }
+
+  /** Whether `v` nests containers deeper than `limit` (then `parse(render(v))`
+    * fails); looks no deeper than `limit + 1` levels. */
+  def deeperThan(v: JValue, limit: Int): Boolean = v match {
+    case JArr(items)  => limit == 0 || items.exists(deeperThan(_, limit - 1))
+    case JObj(fields) => limit == 0 || fields.exists(f => deeperThan(f._2, limit - 1))
+    case _            => false
   }
 
   def parseOpt(s: String): Option[JValue] =
@@ -140,8 +162,9 @@ object Json {
 
   private def fail(msg: String): Nothing = throw new IllegalArgumentException("json: " + msg)
 
-  private final class Parser(s: String) {
+  private final class Parser(s: String, strict: Boolean) {
     var pos = 0
+    private var depth = 0
     def eof: Boolean = pos >= s.length
     def cur: Char = s.charAt(pos)
     def skipWs(): Unit =
@@ -156,8 +179,12 @@ object Json {
       skipWs()
       if (eof) fail("unexpected end")
       cur match {
-        case '{' => parseObj()
-        case '[' => parseArr()
+        case c @ ('{' | '[') =>
+          depth += 1
+          if (depth > MaxDepth) fail(s"nesting deeper than $MaxDepth at $pos")
+          val v = if (c == '{') parseObj() else parseArr()
+          depth -= 1
+          v
         case '"' => JStr(parseString())
         case 't' => lit("true"); JBool(true)
         case 'f' => lit("false"); JBool(false)
@@ -211,6 +238,7 @@ object Json {
 
     def parseString(): String = {
       expect('"')
+      val start = pos
       val sb = new StringBuilder
       while (!eof && cur != '"') {
         val c = cur
@@ -229,6 +257,8 @@ object Json {
             case 'u'  =>
               if (pos + 4 >= s.length) fail("bad \\u escape")
               val hex = s.substring(pos + 1, pos + 5)
+              if (strict && !hex.forall(c => (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')))
+                fail(s"bad \\u escape at $pos")
               sb.append(Integer.parseInt(hex, 16).toChar)
               pos += 4
             case c => fail(s"bad escape '\\$c'")
@@ -236,21 +266,32 @@ object Json {
           pos += 1
         } else { sb.append(c); pos += 1 }
       }
+      if (strict && pos - start > 50000) fail(s"string longer than 50000 at $start")
       expect('"')
       sb.toString
+    }
+
+    /** Consumes a run of digits; returns how many. */
+    private def digits(): Int = {
+      val from = pos
+      while (!eof && cur >= '0' && cur <= '9') pos += 1
+      pos - from
     }
 
     def parseNum(): JNum = {
       val start = pos
       if (!eof && cur == '-') pos += 1
-      while (!eof && cur >= '0' && cur <= '9') pos += 1
-      if (!eof && cur == '.') { pos += 1; while (!eof && cur >= '0' && cur <= '9') pos += 1 }
+      val intStart = pos
+      val intDigits = digits()
+      var ok = intDigits > 0 && (intDigits == 1 || s.charAt(intStart) != '0')
+      if (!eof && cur == '.') { pos += 1; ok &&= digits() > 0 }
       if (!eof && (cur == 'e' || cur == 'E')) {
         pos += 1
         if (!eof && (cur == '+' || cur == '-')) pos += 1
-        while (!eof && cur >= '0' && cur <= '9') pos += 1
+        ok &&= digits() > 0
       }
       if (pos == start) fail(s"bad number at $start")
+      if (strict && (!ok || pos - start > 1000)) fail(s"non-standard number at $start")
       JNum(java.lang.Double.parseDouble(s.substring(start, pos)))
     }
   }

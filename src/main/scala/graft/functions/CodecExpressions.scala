@@ -1,7 +1,10 @@
 package graft.functions
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -10,12 +13,23 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codecs._
+import graft.core.{GeoJson, JArr, JObj, JValue, Json, Wkt}
 
-/** Format-conversion expressions — GeoConvert's whole-document converters as
-  * columnar string↔string functions (SURVEY.md §2.1 S1–S11). Document
-  * parsing is row-local and stateful-within-row, so these are plain
-  * CodegenFallback expressions (cold path; the hot spatial kernels live in
-  * StExpressions).
+/** Format-conversion expressions: GeoConvert's whole-document converters
+  * as columnar functions (SURVEY.md §2.1 S1–S11). Document parsing is
+  * row-local and stateful within a row, so these are CodegenFallback
+  * expressions (cold path; the hot spatial kernels live in StExpressions).
+  *
+  * The decoders into GeoJSON (`kml/gpx/dxf_to_geojson`, `wkt_to_geojson_gc`)
+  * build a JSON tree ([[TreeCodec]]) and return its rendering.
+  * `geojson_features` over one of them, directly or through the taken
+  * branch of a `CASE WHEN fmt ...` dispatch, takes the tree instead and
+  * renders each feature from it, so a document's coordinates are printed
+  * once. Downstream, `st_geomfromgeojson(get_json_object(f, '$.geometry'))`
+  * reads the feature `f` in one parse, and runs the two-step chain for a
+  * feature where one parse could disagree with it (see
+  * [[StGeomFromGeoJson]]). Both shortcuts give the bytes of the chain of
+  * string-to-string functions.
   */
 
 private[functions] object Str2Str {
@@ -31,6 +45,9 @@ private[functions] object Str2Str {
          _: ClassCastException | _: MatchError => true
     case _ => false
   }
+
+  def orNull(body: => Any): Any =
+    try body catch { case t: Throwable if isMalformedInput(t) => null }
 }
 
 private[functions] trait Str2Str extends UnaryExpression with CodegenFallback {
@@ -38,12 +55,18 @@ private[functions] trait Str2Str extends UnaryExpression with CodegenFallback {
   override def nullable: Boolean = true
   def convert(s: String): String
   override def nullSafeEval(v: Any): Any =
-    try UTF8String.fromString(convert(v.asInstanceOf[UTF8String].toString))
-    catch { case t: Throwable if Str2Str.isMalformedInput(t) => null }
+    Str2Str.orNull(UTF8String.fromString(convert(v.asInstanceOf[UTF8String].toString)))
 }
 
-case class KmlToGeojson(child: Expression) extends Str2Str {
-  override def convert(s: String): String = KmlCodec.kml2GeojsonString(s)
+/** A decoder into GeoJSON whose result is a JSON tree; its string form is
+  * the tree's rendering. */
+private[functions] trait TreeCodec extends Str2Str {
+  def tree(s: String): JValue
+  override def convert(s: String): String = tree(s).render
+}
+
+case class KmlToGeojson(child: Expression) extends TreeCodec {
+  override def tree(s: String): JValue = KmlCodec.kml2Geojson(s)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "kml_to_geojson"
 }
@@ -54,8 +77,8 @@ case class GeojsonToKml(child: Expression) extends Str2Str {
   override def prettyName: String = "geojson_to_kml"
 }
 
-case class GpxToGeojson(child: Expression) extends Str2Str {
-  override def convert(s: String): String = GpxCodec.gpx2GeojsonString(s)
+case class GpxToGeojson(child: Expression) extends TreeCodec {
+  override def tree(s: String): JValue = GpxCodec.gpx2Geojson(s)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "gpx_to_geojson"
 }
@@ -66,17 +89,16 @@ case class GeojsonToGpx(child: Expression) extends Str2Str {
   override def prettyName: String = "geojson_to_gpx"
 }
 
-case class DxfToGeojson(child: Expression) extends Str2Str {
-  override def convert(s: String): String = DxfCodec.dxf2GeojsonString(s)
+case class DxfToGeojson(child: Expression) extends TreeCodec {
+  override def tree(s: String): JValue = DxfCodec.dxf2Geojson(s)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "dxf_to_geojson"
 }
 
 /** wkt_to_geojson_gc(str) — GeoConvert's full wkt2Geojson entry point
   * (FeatureCollection string; unsupported tags → empty collection, Q11). */
-case class WktToGeojsonGc(child: Expression) extends Str2Str {
-  override def convert(s: String): String =
-    graft.core.GeoJson.collectionToJson(graft.core.Wkt.wktToFeatureCollection(s)).render
+case class WktToGeojsonGc(child: Expression) extends TreeCodec {
+  override def tree(s: String): JValue = GeoJson.collectionToJson(Wkt.wktToFeatureCollection(s))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "wkt_to_geojson_gc"
 }
@@ -120,20 +142,52 @@ case class KmzToGeojsons(child: Expression) extends UnaryExpression with Codegen
   override def prettyName: String = "kmz_to_geojsons"
 }
 
-/** geojson_features(str) → array of per-feature JSON strings. */
+/** geojson_features(str) → array of per-feature JSON strings.
+  *
+  * When the document comes from a [[TreeCodec]], directly or as the taken
+  * branch of a CASE WHEN (chosen as `CaseWhen.eval` chooses it), the
+  * features are rendered from the codec's tree. That gives the bytes of the
+  * string path, because `render(parse(render(t)))` equals `render(t)` and a
+  * tree nested deeper than `Json.MaxDepth` (which the string path fails to
+  * parse) gives null. Lone surrogates become `?` at the UTF-8 boundary on
+  * both paths. */
 case class GeojsonFeatures(child: Expression) extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any = {
-    import graft.core._
-    try Json.parse(v.asInstanceOf[UTF8String].toString) match {
-      case o: JObj => o.get("features") match {
-        case Some(JArr(items)) =>
-          new GenericArrayData(items.map(f => UTF8String.fromString(f.render)).toArray[Any])
-        case _ => null
+  override def eval(input: InternalRow): Any = source(child, input) match {
+    case None => null
+    case Some(codec: TreeCodec) =>
+      val v = codec.child.eval(input)
+      if (v == null) null
+      else Str2Str.orNull {
+        val t = codec.tree(v.asInstanceOf[UTF8String].toString)
+        if (Json.deeperThan(t, Json.MaxDepth)) null else features(t)
       }
+    case Some(e) =>
+      val v = e.eval(input)
+      if (v == null) null else nullSafeEval(v)
+  }
+  override def nullSafeEval(v: Any): Any =
+    Str2Str.orNull(features(Json.parse(v.asInstanceOf[UTF8String].toString)))
+
+  /** The expression whose value is this row's document: through a CASE WHEN,
+    * its taken branch (None when no branch is taken and there is no ELSE). */
+  @tailrec private def source(e: Expression, input: InternalRow): Option[Expression] = e match {
+    case CaseWhen(branches, elseValue) =>
+      branches.collectFirst { case (c, v) if java.lang.Boolean.TRUE.equals(c.eval(input)) => v }
+        .orElse(elseValue) match {
+        case Some(taken) => source(taken, input)
+        case None        => None
+      }
+    case _ => Some(e)
+  }
+  private def features(doc: JValue): Any = doc match {
+    case o: JObj => o.get("features") match {
+      case Some(JArr(items)) =>
+        new GenericArrayData(items.map(f => UTF8String.fromString(f.render)).toArray[Any])
       case _ => null
-    } catch { case t: Throwable if Str2Str.isMalformedInput(t) => null }
+    }
+    case _ => null
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "geojson_features"

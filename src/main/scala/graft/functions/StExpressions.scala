@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -11,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import org.apache.spark.broadcast.Broadcast
 
-import graft.core.{Kernels, PipIndex, Wkb, Wkt, GeoJson}
+import graft.core.{GeoJson, Geom, JArr, JNull, JNum, JObj, JValue, Json, Kernels, PipIndex, Wkb, Wkt}
 
 /** Spatial Catalyst expressions. Hot scalar kernels (cell id, PIP, point
   * synth, distances, mixing) generate code via static calls into
@@ -555,16 +556,76 @@ case class StAsWkt(child: Expression)
   override def prettyName: String = "st_aswkt"
 }
 
-/** st_geomFromGeoJSON(str) → WKB (null on malformed). */
+/** st_geomFromGeoJSON(str) → WKB (null on malformed).
+  *
+  * Over `get_json_object(f, '$.geometry')` it reads the feature `f` with one
+  * strict `Json` parse ([[StGeomFromGeoJson.geometryMember]]) in place of
+  * Jackson's parse and copy followed by a second parse. It looks at its
+  * child as resolved when it evaluates, since a Column child is still an
+  * unresolved function call when it is built. A feature outside the set
+  * where the one parse agrees with the chain runs the chain.
+  */
 case class StGeomFromGeoJson(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
+  /** `f` when the child is `get_json_object(f, '$.geometry')`. */
+  @transient private[functions] lazy val feature: Option[Expression] = child match {
+    case GetJsonObject(f, Literal(p: UTF8String, _)) if p.toString == "$.geometry" => Some(f)
+    case _ => None
+  }
+  override def eval(input: InternalRow): Any = feature match {
+    case Some(f) =>
+      val doc = f.eval(input)
+      if (doc == null) null
+      else StGeomFromGeoJson.geometryMember(doc.asInstanceOf[UTF8String].toString) match {
+        case Some(JNull) => null
+        case Some(g)     => wkbOrNull(GeoJson.geomFromJson(g))
+        case None        => super.eval(input)
+      }
+    case None => super.eval(input)
+  }
   override def nullSafeEval(v: Any): Any =
-    (try Some(GeoJson.readGeom(v.asInstanceOf[UTF8String].toString))
-     catch { case _: IllegalArgumentException => None }).map(Wkb.write).orNull
+    wkbOrNull(GeoJson.readGeom(v.asInstanceOf[UTF8String].toString))
+  private def wkbOrNull(g: => Geom): Any =
+    (try Some(g) catch { case _: IllegalArgumentException => None }).map(Wkb.write).orNull
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_geomfromgeojson"
+}
+
+object StGeomFromGeoJson {
+  /** The JSON that `get_json_object(doc, '$.geometry')` hands to
+    * `st_geomfromgeojson`, from one [[Json.parseStrict]] of `doc`:
+    *  - `Some(g)`: `g` is the first `geometry` member with a non-null value
+    *    (Jackson's path match passes over null ones) and an object;
+    *  - `Some(JNull)`: no member qualifies, so the chain gives null;
+    *  - None: one parse may disagree with the chain. This covers a document
+    *    that fails the strict parse (also on content after the root, which
+    *    Jackson never reads), or that is not an object. It also covers a
+    *    geometry that is not an object (Jackson returns a string's contents
+    *    unquoted), or that holds a non-finite number (Jackson copies it as a
+    *    string) or a zero with a minus sign (it copies the integer `-0` as
+    *    `0`).
+    */
+  private[graft] def geometryMember(doc: String): Option[JValue] = {
+    val root = try Json.parseStrict(doc) catch { case _: IllegalArgumentException => JNull }
+    root match {
+      case JObj(fields) =>
+        fields.collectFirst { case ("geometry", g) if g != JNull => g } match {
+          case None                                => Some(JNull)
+          case Some(g: JObj) if copiesExactly(g)   => Some(g)
+          case _                                   => None
+        }
+      case _ => None
+    }
+  }
+
+  private def copiesExactly(v: JValue): Boolean = v match {
+    case JNum(d)      => java.lang.Double.isFinite(d) && !(d == 0 && 1 / d < 0)
+    case JArr(items)  => items.forall(copiesExactly)
+    case JObj(fields) => fields.forall(f => copiesExactly(f._2))
+    case _            => true
+  }
 }
 
 /** st_asGeoJSON(wkb) → String (JSON.stringify-compatible number printing). */

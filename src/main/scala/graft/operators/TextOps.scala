@@ -467,8 +467,9 @@ object TextOps {
       .filter(col("pos") <= greatest(col("n_grams") - w, lit(0)))
       .select(col("doc_id"), col("minh").as("fp")).distinct()
     val firstPos = grams.groupBy("doc_id", "h").agg(min("pos").as("p"))
-    sel.join(firstPos,
-        sel("doc_id") === firstPos("doc_id") && sel("fp") === firstPos("h"))
-      .select(sel("doc_id"), sel("fp"), col("p").cast("long").as("pos"))
+    // both sides derive from `grams`: aliases keep their doc_id apart
+    sel.as("s").join(firstPos.as("f"),
+        col("s.doc_id") === col("f.doc_id") && col("s.fp") === col("f.h"))
+      .select(col("s.doc_id"), col("s.fp"), col("f.p").cast("long").as("pos"))
   }
 }

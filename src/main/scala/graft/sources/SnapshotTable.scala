@@ -224,8 +224,9 @@ object SnapshotTable {
     // ONE read-back aggregation keyed by (file, bucket) feeds BOTH the
     // per-bucket lineage and the per-file [min,max] manifest stats —
     // bounded by files × buckets rows, folded driver-side.
+    // The schema is the one just written, so no footer-inference job runs.
     val spark = df.sparkSession
-    val written = spark.read.parquet(batchDir.toString)
+    val written = spark.read.schema(df.schema).parquet(batchDir.toString)
       .select(dataCols.map(col): _*)
     // relative path key (NOT the leaf name: under partitionBy a task
     // writing two blocks emits the same part-XXXX leaf in two dirs)

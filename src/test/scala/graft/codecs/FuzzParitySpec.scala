@@ -10,18 +10,20 @@ import graft.core._
   * gx:SimpleArrayData, leading-CCW shapefile rings, bare geometries inside
   * FeatureCollections for GPX).
   */
-class FuzzParitySpec extends AnyFunSuite {
+/** The fixed-seed documents of [[FuzzParitySpec]], also a corpus for other
+  * specs. */
+object FuzzCorpus {
 
-  private def num(rnd: Random): String = {
+  def num(rnd: Random): String = {
     val v = Math.round((rnd.nextDouble() * 360 - 180) * 1000).toDouble / 1000
     Json.num(v)
   }
 
-  private def coordPair(rnd: Random): String = s"${num(rnd)},${num(rnd)}"
-  private def coordList(rnd: Random, n: Int): String =
+  def coordPair(rnd: Random): String = s"${num(rnd)},${num(rnd)}"
+  def coordList(rnd: Random, n: Int): String =
     (1 to n).map(_ => coordPair(rnd)).mkString(" ")
 
-  private def randomPlacemark(rnd: Random): String = {
+  def randomPlacemark(rnd: Random): String = {
     val name = if (rnd.nextBoolean()) s"<name>pm${rnd.nextInt(1000)}</name>" else ""
     val desc = if (rnd.nextInt(3) == 0) s"<description>d &amp; ${rnd.nextInt(100)}</description>" else ""
     val styleUrl = if (rnd.nextInt(3) == 0) s"<styleUrl>#s${rnd.nextInt(4)}</styleUrl>" else ""
@@ -44,7 +46,7 @@ class FuzzParitySpec extends AnyFunSuite {
     s"<Placemark>$name$desc$styleUrl$geom</Placemark>"
   }
 
-  private def randomStyle(rnd: Random, id: Int): String = {
+  def randomStyle(rnd: Random, id: Int): String = {
     val line = if (rnd.nextBoolean())
       s"<LineStyle><color>${"%08x".format(rnd.nextInt())}</color><width>${1 + rnd.nextInt(5)}</width></LineStyle>" else ""
     val poly = if (rnd.nextBoolean())
@@ -52,22 +54,40 @@ class FuzzParitySpec extends AnyFunSuite {
     s"""<Style id="s$id">$line$poly</Style>"""
   }
 
-  test("fuzz: 40 random KML docs parity") {
+  def randomGeojsonFeature(rnd: Random): String = {
+    def pos() = s"[${num(rnd)},${num(rnd)}]"
+    def line(n: Int) = (1 to n).map(_ => pos()).mkString("[", ",", "]")
+    val geom = rnd.nextInt(5) match {
+      case 0 => s"""{"type":"Point","coordinates":${pos()}}"""
+      case 1 => s"""{"type":"LineString","coordinates":${line(2 + rnd.nextInt(3))}}"""
+      case 2 => s"""{"type":"Polygon","coordinates":[${line(4)}${if (rnd.nextBoolean()) "," + line(4) else ""}]}"""
+      case 3 => s"""{"type":"MultiPoint","coordinates":${line(2 + rnd.nextInt(3))}}"""
+      case _ => s"""{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":${pos()}},{"type":"LineString","coordinates":${line(2)}}]}"""
+    }
+    val style = rnd.nextInt(3) match {
+      case 0 => """"style":{},"""
+      case 1 => s""""style":{"color":"#${"%06x".format(rnd.nextInt(0xFFFFFF))}","opacity":${Json.num(rnd.nextInt(100) / 100.0)},"weight":${1 + rnd.nextInt(4)}},"""
+      case _ => s""""style":{"stroke":1,"fillColor":"#${"%06x".format(rnd.nextInt(0xFFFFFF))}"},"""
+    }
+    val props = if (rnd.nextBoolean()) s"""{"name":"f${rnd.nextInt(100)}"}""" else "{}"
+    s"""{"type":"Feature","properties":$props,$style"geometry":$geom}"""
+  }
+
+  /** 40 KML documents (seed 1234). */
+  lazy val kmlDocs: Vector[String] = {
     val rnd = new Random(1234)
-    (1 to 40).foreach { i =>
+    (1 to 40).map { _ =>
       val styles = (0 until rnd.nextInt(4)).map(j => randomStyle(rnd, j)).mkString
       val pms = (1 to 1 + rnd.nextInt(5)).map(_ => randomPlacemark(rnd)).mkString
       val folders = if (rnd.nextBoolean()) s"<Folder>$pms</Folder>" else pms
-      val kml = s"<kml><Document>$styles$folders</Document></kml>"
-      val ours = KmlCodec.kml2GeojsonString(kml)
-      val ref = RefOracle("kml2geojson", kml)
-      assert(ours == ref, s"doc $i: ${kml.take(160)}")
-    }
+      s"<kml><Document>$styles$folders</Document></kml>"
+    }.toVector
   }
 
-  test("fuzz: 40 random GPX docs parity") {
+  /** 40 GPX documents (seed 77). */
+  lazy val gpxDocs: Vector[String] = {
     val rnd = new Random(77)
-    (1 to 40).foreach { i =>
+    (1 to 40).map { _ =>
       val parts = (1 to 1 + rnd.nextInt(6)).map { _ =>
         rnd.nextInt(3) match {
           case 0 =>
@@ -88,46 +108,55 @@ class FuzzParitySpec extends AnyFunSuite {
             s"<rte>$pts</rte>"
         }
       }.mkString
-      val gpx = s"<gpx>$parts</gpx>"
+      s"<gpx>$parts</gpx>"
+    }.toVector
+  }
+
+  /** 40 GeoJSON FeatureCollections (seed 99). */
+  lazy val geojsonDocs: Vector[String] = {
+    val rnd = new Random(99)
+    (1 to 40).map { _ =>
+      val feats = (1 to 1 + rnd.nextInt(5)).map(_ => randomGeojsonFeature(rnd)).mkString(",")
+      s"""{"type":"FeatureCollection","features":[$feats]}"""
+    }.toVector
+  }
+
+  /** 15 two-placemark KML documents (seed 5150). */
+  lazy val compositionKmls: Vector[String] = {
+    val rnd = new Random(5150)
+    (1 to 15).map(_ =>
+      s"<kml><Document>${(1 to 2).map(_ => randomPlacemark(rnd)).mkString}</Document></kml>").toVector
+  }
+}
+
+class FuzzParitySpec extends AnyFunSuite {
+  import FuzzCorpus._
+
+  test("fuzz: 40 random KML docs parity") {
+    kmlDocs.zip(1 to 40).foreach { case (kml, i) =>
+      val ours = KmlCodec.kml2GeojsonString(kml)
+      val ref = RefOracle("kml2geojson", kml)
+      assert(ours == ref, s"doc $i: ${kml.take(160)}")
+    }
+  }
+
+  test("fuzz: 40 random GPX docs parity") {
+    gpxDocs.zip(1 to 40).foreach { case (gpx, i) =>
       val ours = GpxCodec.gpx2GeojsonString(gpx)
       val ref = RefOracle("gpx2geojson", gpx)
       assert(ours == ref, s"doc $i: ${gpx.take(160)}")
     }
   }
 
-  private def randomGeojsonFeature(rnd: Random): String = {
-    def pos() = s"[${num(rnd)},${num(rnd)}]"
-    def line(n: Int) = (1 to n).map(_ => pos()).mkString("[", ",", "]")
-    val geom = rnd.nextInt(5) match {
-      case 0 => s"""{"type":"Point","coordinates":${pos()}}"""
-      case 1 => s"""{"type":"LineString","coordinates":${line(2 + rnd.nextInt(3))}}"""
-      case 2 => s"""{"type":"Polygon","coordinates":[${line(4)}${if (rnd.nextBoolean()) "," + line(4) else ""}]}"""
-      case 3 => s"""{"type":"MultiPoint","coordinates":${line(2 + rnd.nextInt(3))}}"""
-      case _ => s"""{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":${pos()}},{"type":"LineString","coordinates":${line(2)}}]}"""
-    }
-    val style = rnd.nextInt(3) match {
-      case 0 => """"style":{},"""
-      case 1 => s""""style":{"color":"#${"%06x".format(rnd.nextInt(0xFFFFFF))}","opacity":${Json.num(rnd.nextInt(100) / 100.0)},"weight":${1 + rnd.nextInt(4)}},"""
-      case _ => s""""style":{"stroke":1,"fillColor":"#${"%06x".format(rnd.nextInt(0xFFFFFF))}"},"""
-    }
-    val props = if (rnd.nextBoolean()) s"""{"name":"f${rnd.nextInt(100)}"}""" else "{}"
-    s"""{"type":"Feature","properties":$props,$style"geometry":$geom}"""
-  }
-
   test("fuzz: 40 random GeoJSON docs -> KML and GPX parity") {
-    val rnd = new Random(99)
-    (1 to 40).foreach { i =>
-      val feats = (1 to 1 + rnd.nextInt(5)).map(_ => randomGeojsonFeature(rnd)).mkString(",")
-      val gj = s"""{"type":"FeatureCollection","features":[$feats]}"""
+    geojsonDocs.zip(1 to 40).foreach { case (gj, i) =>
       assert(KmlCodec.geojson2Kml(gj) == RefOracle("geojson2kml", gj), s"kml doc $i")
       assert(GpxCodec.geojson2Gpx(gj) == RefOracle("geojson2gpx", gj), s"gpx doc $i")
     }
   }
 
   test("fuzz: composition kml -> geojson -> kml parity with the reference") {
-    val rnd = new Random(5150)
-    (1 to 15).foreach { i =>
-      val kml = s"<kml><Document>${(1 to 2).map(_ => randomPlacemark(rnd)).mkString}</Document></kml>"
+    compositionKmls.zip(1 to 15).foreach { case (kml, i) =>
       val gj = KmlCodec.kml2GeojsonString(kml)
       assert(gj == RefOracle("kml2geojson", kml), s"fwd $i")
       assert(KmlCodec.geojson2Kml(gj) == RefOracle("geojson2kml", gj), s"rev $i")

@@ -12,6 +12,9 @@ import graft.core._
   * contract with the reference itself as the oracle.
   */
 object RefOracle {
+  /** The repository root, where `scripts/ref_oracle.js` lives; build.sbt
+    * passes it to the forked test JVM. */
+  private val RepoRoot = new java.io.File(sys.props.getOrElse("graft.repoRoot", "."))
   def call(op: String, fields: (String, JValue)*): String = {
     val req = JObj(("op" -> (JStr(op): JValue)) +: fields.toVector).render
     val out = new StringBuilder
@@ -20,7 +23,7 @@ object RefOracle {
       in => { in.write(req.getBytes("UTF-8")); in.close() },
       outS => { out.append(new String(outS.readAllBytes(), "UTF-8")); outS.close() },
       err => { errOut.append(new String(err.readAllBytes(), "UTF-8")); err.close() })
-    val p = Process(Seq("node", "scripts/ref_oracle.js"), new java.io.File("/root/repo")).run(io)
+    val p = Process(Seq("node", "scripts/ref_oracle.js"), RepoRoot).run(io)
     assert(p.exitValue() == 0,
       s"oracle failed for $op: ${errOut.toString.linesIterator.take(6).mkString(" | ").take(500)}")
     out.toString
@@ -149,6 +152,21 @@ class KmlParitySpec extends AnyFunSuite {
     val gj2 = KmlCodec.kml2GeojsonString(kml2)
     val kml3 = KmlCodec.geojson2Kml(gj2)
     assert(kml2 == kml3) // fixpoint after one round trip
+  }
+
+  test("geojson_to_kml: JSON nested deeper than Json.MaxDepth is null (diverges from the reference)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.GeojsonToKml
+    // The reference's JSON.parse takes any depth its stack allows; core.Json
+    // stops at MaxDepth (1000) so that deep input is malformed, not a
+    // StackOverflowError. Root object = depth 1, properties = depth 2.
+    def feature(depth: Int) = {
+      val n = depth - 2
+      s"""{"type":"Feature","properties":{"p":${"[" * n}${"]" * n}},""" +
+        """"geometry":{"type":"Point","coordinates":[1,2]}}"""
+    }
+    assert(GeojsonToKml(Literal(feature(Json.MaxDepth))).eval() != null)
+    assert(GeojsonToKml(Literal(feature(Json.MaxDepth + 1))).eval() == null)
   }
 }
 
