@@ -67,6 +67,9 @@ object Json {
     sb.toString
   }
 
+  /** Prints `v`. Throws IllegalArgumentException when `v` nests containers
+    * deeper than [[MaxDepth]] (the [[deeperThan]] predicate), so everything
+    * this prints parses again and recursion stays within the stack. */
   def render(v: JValue): String = {
     // hot path (every codec expression renders once per row): single
     // java StringBuilder, strings escaped in place (no per-string builder),
@@ -97,7 +100,8 @@ object Json {
       }
       sb.append(s, flushed, n).append('"')
     }
-    def go(v: JValue): Unit = v match {
+    // `depth`: containers enclosing `v`
+    def go(v: JValue, depth: Int): Unit = v match {
       case JNull    => sb.append("null")
       case JBool(b) => sb.append(if (b) "true" else "false")
       case JNum(d) =>
@@ -109,26 +113,29 @@ object Json {
         }
       case JStr(s) => esc(s)
       case JArr(items) =>
+        if (depth == MaxDepth) fail(s"nesting deeper than $MaxDepth")
         sb.append('[')
         var first = true
-        items.foreach { it => if (!first) sb.append(','); first = false; go(it) }
+        items.foreach { it => if (!first) sb.append(','); first = false; go(it, depth + 1) }
         sb.append(']')
       case JObj(fields) =>
+        if (depth == MaxDepth) fail(s"nesting deeper than $MaxDepth")
         sb.append('{')
         var first = true
         fields.foreach { case (k, it) =>
           if (!first) sb.append(','); first = false
-          esc(k); sb.append(':'); go(it)
+          esc(k); sb.append(':'); go(it, depth + 1)
         }
         sb.append('}')
     }
-    go(v)
+    go(v, 0)
     sb.toString
   }
 
-  /** Deepest container nesting the parser accepts; the root container is at
-    * depth 1. Deeper input is malformed (IllegalArgumentException) instead
-    * of a StackOverflowError. Jackson's default read limit is the same. */
+  /** Deepest container nesting the parser accepts and the printer prints;
+    * the root container is at depth 1. Deeper input is malformed
+    * (IllegalArgumentException) instead of a StackOverflowError. Jackson's
+    * default read limit is the same. */
   val MaxDepth = 1000
 
   /** Recursive-descent parser. Throws IllegalArgumentException on bad input. */
@@ -149,8 +156,8 @@ object Json {
     v
   }
 
-  /** Whether `v` nests containers deeper than `limit` (then `parse(render(v))`
-    * fails); looks no deeper than `limit + 1` levels. */
+  /** Whether `v` nests containers deeper than `limit` (at `MaxDepth`:
+    * whether `render(v)` throws); looks no deeper than `limit + 1` levels. */
   def deeperThan(v: JValue, limit: Int): Boolean = v match {
     case JArr(items)  => limit == 0 || items.exists(deeperThan(_, limit - 1))
     case JObj(fields) => limit == 0 || fields.exists(f => deeperThan(f._2, limit - 1))

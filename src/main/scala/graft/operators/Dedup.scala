@@ -543,6 +543,12 @@ object Dedup {
           s"connectedComponents: unknown algorithm '$other' (label | star | auto)")
     }
 
+  /** The pointer-jumping min-label loop of [[connectedComponents]]: returns
+    * (labels, converged, passes). Each pass's labels are truncated with
+    * `localCheckpoint`, which keeps the blocks in executor storage only: it
+    * does not survive the loss of an executor holding them (the truncated
+    * plan has no lineage to recompute from), so such a loss fails the
+    * query instead of recomputing the lost labels. */
   private def labelPropagation(
       pairs: DataFrame, a: Column, b: Column, maxIters: Int): (DataFrame, Boolean, Int) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK

@@ -6,8 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{Json, JValue, JObj, JArr, JStr, JNum}
+import StatsParquetFormat.FileBucketStat
 
 /** Minimal Iceberg-style snapshot/manifest table layout on Parquet
   * (SURVEY.md §7.1 — no Iceberg jar ships offline; swapping in real Iceberg
@@ -22,8 +24,13 @@ import graft.core.{Json, JValue, JObj, JArr, JStr, JNum}
   *
   * Each snapshot records, per committed batch: the data files, row count,
   * an order-independent content fingerprint (XOR of per-row xxhash64 over
-  * all columns — identical at any parallelism), and per-bucket lineage
-  * metrics (rows + fingerprint per z-order bucket). This gives:
+  * all columns — identical at any parallelism), per-bucket lineage
+  * metrics (rows + fingerprint per z-order bucket) and per-file bucket
+  * ranges. The Parquet writer computes these stats from the rows it writes
+  * ([[StatsParquetFormat]]), in the write job itself; a commit checks that
+  * the files it lists on disk are the files the writer reported, and
+  * [[compact]] also reads its rewritten files back to verify them. This
+  * gives:
   *
   *  - exact resume: a re-run skips batches already in the manifest and
   *    produces a byte-identical table (checkpoint/resume mandate)
@@ -132,13 +139,15 @@ object SnapshotTable {
 
   // ---------------- write path ----------------
 
-  /** Order-independent row fingerprint: xxhash64 over all columns. */
-  private def rowHash(df: DataFrame) = xxhash64(df.columns.map(col): _*)
-
   /** Commit one batch: skip if `batchId` is already in the manifest (exact
     * resume). Data is partitioned on `bucketCol` into `numPartitions` files
     * and sorted within partitions by (`bucketCol`, `sortCols`) — byte-stable
     * at any parallelism. Returns true if written, false if skipped.
+    *
+    * Stats: the Parquet writer computes the batch's manifest stats from the
+    * rows it writes, so a commit runs only the write's jobs and reads
+    * nothing back. When the files listed on disk are not the files the
+    * writer reported, the commit throws and publishes nothing.
     *
     * Concurrency: DISTINCT batchIds may commit concurrently — each writes
     * its own data dir and [[publish]] CASes the snapshot version (losers
@@ -190,8 +199,11 @@ object SnapshotTable {
     false // unreachable
   }
 
-  /** Write one batch's data files + compute its manifest stats WITHOUT
-    * publishing a snapshot (shared by [[commitBatch]] and [[compact]]). */
+  /** Write one batch's data files and return its manifest entry WITHOUT
+    * publishing a snapshot (shared by [[commitBatch]] and [[compact]]). The
+    * stats come from the writer, per written file; a listed file the writer
+    * did not report, or a reported file that is not on disk, fails the
+    * write loudly and removes the batch dir. */
   private def writeBatch(df: DataFrame, table: String, batchId: String,
       bucketCol: String, sortCols: Seq[String], numPartitions: Int,
       zOrderRes: Int): Batch = {
@@ -199,55 +211,29 @@ object SnapshotTable {
     // clean leftovers from a killed writer (invisible to readers anyway)
     if (Files.exists(batchDir)) deleteRec(batchDir)
 
-    val dataCols = df.columns.toSeq
-    if (zOrderRes >= 0) {
-      // z-order block = high bits of the cell's morton code — a pure
-      // function of the value. partitionBy makes the block a DIRECTORY, so
-      // each data file holds exactly one contiguous morton block: per-file
-      // [min,max] stats become tight and readRange skips precisely,
-      // independent of how block ids hash across shuffle tasks.
-      val block = graft.operators.SpatialOps.zBlock(col(bucketCol), zOrderRes, numPartitions)
-      df.withColumn("__zblock", block)
-        .repartition(numPartitions, col("__zblock"))
-        .sortWithinPartitions(col("__zblock") +: (bucketCol +: sortCols).map(col): _*)
-        .write.mode("overwrite").partitionBy("__zblock").parquet(batchDir.toString)
-    } else {
-      // generic buckets: hash placement (byte-stable; each bucket whole in
-      // one file) — no cross-file range clustering, readRange reads all
-      df.repartition(numPartitions, col(bucketCol))
-        .sortWithinPartitions((bucketCol +: sortCols).map(col): _*)
-        .write.mode("overwrite").parquet(batchDir.toString)
-    }
-
-    // lineage metrics from what was actually written (drop the inferred
-    // __zblock partition column: fingerprints cover the data columns only).
-    // ONE read-back aggregation keyed by (file, bucket) feeds BOTH the
-    // per-bucket lineage and the per-file [min,max] manifest stats —
-    // bounded by files × buckets rows, folded driver-side.
-    // The schema is the one just written, so no footer-inference job runs.
-    val spark = df.sparkSession
-    val written = spark.read.schema(df.schema).parquet(batchDir.toString)
-      .select(dataCols.map(col): _*)
-    // relative path key (NOT the leaf name: under partitionBy a task
-    // writing two blocks emits the same part-XXXX leaf in two dirs)
-    val relMarker = s"/b$batchId/"
-    val fineStats = written
-      .groupBy(input_file_name().as("f"), col(bucketCol).as("bucket"))
-      .agg(count(lit(1)).as("rows"),
-        // XOR-fold of row hashes: associative+commutative → deterministic
-        expr(s"bit_xor(${fpExpr(written)})").as("fp"))
-      .collect().map { r =>
-        val uri = r.getString(0)
-        (uri.substring(uri.lastIndexOf(relMarker) + relMarker.length),
-          r.getLong(1), r.getLong(2), r.getLong(3))
+    val (laidOut, partitionBy) =
+      if (zOrderRes >= 0) {
+        // z-order block = high bits of the cell's morton code — a pure
+        // function of the value. partitionBy makes the block a DIRECTORY, so
+        // each data file holds exactly one contiguous morton block: per-file
+        // [min,max] stats become tight and readRange skips precisely,
+        // independent of how block ids hash across shuffle tasks.
+        val block = graft.operators.SpatialOps.zBlock(col(bucketCol), zOrderRes, numPartitions)
+        (df.withColumn("__zblock", block)
+          .repartition(numPartitions, col("__zblock"))
+          .sortWithinPartitions(col("__zblock") +: (bucketCol +: sortCols).map(col): _*),
+          Seq("__zblock"))
+      } else {
+        // generic buckets: hash placement (byte-stable; each bucket whole in
+        // one file) — no cross-file range clustering, readRange reads all
+        (df.repartition(numPartitions, col(bucketCol))
+          .sortWithinPartitions((bucketCol +: sortCols).map(col): _*), Nil)
       }
-    val bucketStats = fineStats.groupBy(_._2).map { case (bucket, xs) =>
-      BucketStat(bucket, xs.map(_._3).sum, xs.map(_._4).foldLeft(0L)(_ ^ _))
-    }.toVector.sortBy(_.bucket)
-    val dataFileStats = fineStats.groupBy(_._1).map { case (rel, xs) =>
-      rel -> FileStat(rel, xs.map(_._2).min, xs.map(_._2).max, xs.map(_._3).sum)
-    }.toMap
+    val written = StatsParquetFormat.write(laidOut, batchDir.toString, bucketCol, partitionBy)
 
+    // files keyed by path relative to the batch dir (NOT the leaf name:
+    // under partitionBy a task writing two blocks emits the same part-XXXX
+    // leaf in two dirs)
     val walk = Files.walk(batchDir)
     val files =
       try walk.iterator().asScala
@@ -255,14 +241,52 @@ object SnapshotTable {
         .map(p => batchDir.relativize(p).toString)
         .toVector.sorted
       finally walk.close()
-    // a listed file with no stats row holds no rows → empty [min > max]
-    // range, always skippable
-    val fileStats = files.map(f =>
-      dataFileStats.getOrElse(f, FileStat(f, 0L, -1L, 0L)))
-    val totalRows = bucketStats.map(_.rows).sum
-    val totalFp = bucketStats.map(_.fingerprint).foldLeft(0L)(_ ^ _)
+    val reported = written.map(_.file).toSet
+    if (reported != files.toSet) {
+      deleteRec(batchDir)
+      throw new IllegalStateException(
+        s"commit b$batchId: files on disk without writer stats " +
+          s"[${files.filterNot(reported).take(5).mkString(", ")}], reported files not on disk " +
+          s"[${reported.diff(files.toSet).take(5).mkString(", ")}] — aborted, nothing published")
+    }
+    batchOf(batchId, files, written)
+  }
 
-    Batch(batchId, files, totalRows, totalFp, bucketStats, fileStats)
+  /** A batch's manifest entry from its files and per-(file, bucket) rows
+    * and fingerprints, which may hold several runs of one (file, bucket):
+    * rows add and fingerprints XOR. A file with no rows gets an empty
+    * [min > max] range, always skippable. */
+  private def batchOf(batchId: String, files: Vector[String], fine: Seq[FileBucketStat]): Batch = {
+    val live = fine.filter(_.rows > 0)
+    val buckets = live.groupBy(_.bucket).map { case (bucket, xs) =>
+      BucketStat(bucket, xs.map(_.rows).sum, xs.map(_.fp).foldLeft(0L)(_ ^ _))
+    }.toVector.sortBy(_.bucket)
+    val byFile = live.groupBy(_.file)
+    val fileStats = files.map(f => byFile.get(f).fold(FileStat(f, 0L, -1L, 0L)) { xs =>
+      FileStat(f, xs.map(_.bucket).min, xs.map(_.bucket).max, xs.map(_.rows).sum)
+    })
+    Batch(batchId, files, buckets.map(_.rows).sum,
+      buckets.map(_.fingerprint).foldLeft(0L)(_ ^ _), buckets, fileStats)
+  }
+
+  /** The per-(file, bucket) rows and fingerprints of a batch's files, read
+    * back from disk: one aggregation keyed by (file, bucket), folded on the
+    * driver. `schema` is the one written, so no footer-inference job runs;
+    * the inferred `__zblock` partition column is dropped, as fingerprints
+    * cover the data columns only. */
+  private def readBack(spark: SparkSession, table: String, batchId: String,
+      schema: StructType, bucketCol: String): Seq[FileBucketStat] = {
+    val dataCols = schema.fieldNames.toSeq.map(col)
+    val relMarker = s"/b$batchId/"
+    spark.read.schema(schema).parquet(Paths.get(table, "data", s"b$batchId").toString)
+      .select(dataCols: _*)
+      .groupBy(input_file_name().as("f"), col(bucketCol).as("bucket"))
+      .agg(count(lit(1)).as("rows"), bit_xor(xxhash64(dataCols: _*)).as("fp"))
+      .collect().toSeq.map { r =>
+        val uri = r.getString(0)
+        FileBucketStat(uri.substring(uri.lastIndexOf(relMarker) + relMarker.length),
+          r.getLong(1), r.getLong(2), r.getLong(3))
+      }
   }
 
   /** Publish snapshot `next` with an optimistic-concurrency check: the
@@ -303,9 +327,11 @@ object SnapshotTable {
     * `numPartitions` files ⇒ listing/open overhead dominates scans; the
     * Iceberg `rewrite_data_files` analog). Reads the current snapshot,
     * rewrites the union under the standard byte-stable layout as batch
-    * `c<newVersion>`, VERIFIES content (rows + order-independent XOR
-    * fingerprint must equal the source snapshot — on mismatch the new
-    * files are removed and compact throws; the table is never corrupted),
+    * `c<newVersion>`, VERIFIES content (reads the rewritten files back: their
+    * rows + order-independent XOR fingerprint must equal the source
+    * snapshot's, and their per-bucket and per-file stats the writer's — on
+    * mismatch the new files are removed and compact throws; the table is
+    * never corrupted),
     * then publishes a snapshot whose batch list is the single compacted
     * batch. `onlyBatchesUnderRows` makes it INCREMENTAL: only batches
     * under the threshold merge (bin-pack the accumulated small commits,
@@ -330,11 +356,13 @@ object SnapshotTable {
     val src = readSnapshot(spark, table, Snapshot(snap.version, small))
     val batch = writeBatch(src, table, batchId, bucketCol,
       sortCols, numPartitions, zOrderRes)
-    if (batch.rows != srcRows || batch.fingerprint != srcFp) {
+    val back = batchOf(batchId, batch.files, readBack(spark, table, batchId, src.schema, bucketCol))
+    if (back.rows != srcRows || back.fingerprint != srcFp || back != batch) {
       deleteRec(Paths.get(table, "data", s"b$batchId"))
       throw new IllegalStateException(
-        s"compact: rewritten content mismatch (rows ${batch.rows} vs $srcRows, " +
-          s"fp ${batch.fingerprint.toHexString} vs ${srcFp.toHexString}) — aborted, table unchanged")
+        s"compact: rewritten content mismatch (rows ${back.rows} vs $srcRows, " +
+          s"fp ${back.fingerprint.toHexString} vs ${srcFp.toHexString}, writer stats " +
+          s"${if (back == batch) "agree" else "disagree"}) — aborted, table unchanged")
     }
     publish(table, Snapshot(snap.version + 1, big :+ batch))
     true
@@ -366,9 +394,6 @@ object SnapshotTable {
     gone.foreach(deleteRec)
     gone.map(_.getFileName.toString)
   }
-
-  private def fpExpr(df: DataFrame): String =
-    s"xxhash64(${df.columns.mkString(", ")})"
 
   // ---------------- read path ----------------
 
@@ -414,19 +439,8 @@ object SnapshotTable {
     * scan, like every manifest prune. Returns (frame, selectedFiles,
     * totalFiles).
     */
-  def readRange(spark: SparkSession, table: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val snap = currentSnapshot(table)
-    var total = 0
-    val paths = snap.batches.flatMap { b =>
-      val statted = b.fileStats.map(_.file).toSet
-      val keep = b.fileStats.filter(fs => fs.maxBucket >= lo && fs.minBucket <= hi).map(_.file) ++
-        b.files.filterNot(statted.contains) // no stats recorded → cannot skip
-      total += b.files.length
-      keep.map(f => Paths.get(table, "data", s"b${b.batchId}", f).toString)
-    }
-    val df = if (paths.isEmpty) spark.emptyDataFrame else spark.read.parquet(paths: _*)
-    (df, paths.length, total)
-  }
+  def readRange(spark: SparkSession, table: String, lo: Long, hi: Long): (DataFrame, Int, Int) =
+    readPruned(spark, table)(fs => fs.maxBucket >= lo && fs.minBucket <= hi)
 
   /** Manifest-level file skipping for a DISCRETE bucket set (the IVF-probe
     * shape: read only the probed clusters): keep files whose [min,max]
@@ -436,23 +450,31 @@ object SnapshotTable {
   def readBuckets(spark: SparkSession, table: String,
       buckets: Seq[Long]): (DataFrame, Int, Int) = {
     val want = buckets.sorted
-    def hits(lo: Long, hi: Long): Boolean = {
-      // first requested bucket >= lo, then check it is <= hi
+    readPruned(spark, table) { fs =>
+      // first requested bucket >= minBucket, then check it is <= maxBucket
       var a = 0; var b = want.length
-      while (a < b) { val m = (a + b) >>> 1; if (want(m) < lo) a = m + 1 else b = m }
-      a < want.length && want(a) <= hi
+      while (a < b) { val m = (a + b) >>> 1; if (want(m) < fs.minBucket) a = m + 1 else b = m }
+      a < want.length && want(a) <= fs.maxBucket
     }
+  }
+
+  /** The current snapshot's files that `keep` selects by their stats, plus
+    * every file without stats. When the table has files but none is
+    * selected, the frame is empty with the table's columns. */
+  private def readPruned(spark: SparkSession, table: String)
+      (keep: FileStat => Boolean): (DataFrame, Int, Int) = {
     val snap = currentSnapshot(table)
-    var total = 0
+    def path(b: Batch, f: String) = Paths.get(table, "data", s"b${b.batchId}", f).toString
     val paths = snap.batches.flatMap { b =>
       val statted = b.fileStats.map(_.file).toSet
-      val keep = b.fileStats.filter(fs => hits(fs.minBucket, fs.maxBucket)).map(_.file) ++
-        b.files.filterNot(statted.contains)
-      total += b.files.length
-      keep.map(f => Paths.get(table, "data", s"b${b.batchId}", f).toString)
+      (b.fileStats.filter(keep).map(_.file) ++ b.files.filterNot(statted.contains)).map(path(b, _))
     }
-    val df = if (paths.isEmpty) spark.emptyDataFrame else spark.read.parquet(paths: _*)
-    (df, paths.length, total)
+    val all = snap.batches.flatMap(b => b.files.map(path(b, _)))
+    val df =
+      if (paths.nonEmpty) spark.read.parquet(paths: _*)
+      else if (all.nonEmpty) spark.read.parquet(all.head).where(lit(false))
+      else spark.emptyDataFrame
+    (df, paths.length, all.length)
   }
 
   /** Lineage metrics of the current snapshot as a DataFrame. */
@@ -463,7 +485,6 @@ object SnapshotTable {
     }.toDF("batch_id", "bucket", "rows", "fingerprint")
   }
 
-  /** Whole-table fingerprint (order-independent). */
   /** Exactly-once streaming ingest: wires a streaming DataFrame into a
     * snapshot table through `foreachBatch`. Structured Streaming delivers
     * micro-batches at-least-once after recovery (a failed epoch replays
@@ -482,6 +503,8 @@ object SnapshotTable {
       ()
     }
 
+  /** Whole-table fingerprint (order-independent): (rows, XOR of the batch
+    * fingerprints). */
   def tableFingerprint(table: String): (Long, Long) = {
     val snap = currentSnapshot(table)
     (snap.batches.map(_.rows).sum, snap.batches.map(_.fingerprint).foldLeft(0L)(_ ^ _))

@@ -18,6 +18,17 @@ class JsonSpec extends AnyFunSuite {
     val s = "a\"b\\c\nd\te"
     assert(Json.parse(Json.escape(s)) == JStr(s))
   }
+  test("render throws beyond MaxDepth, exactly where deeperThan holds; what it prints parses") {
+    // arrays and objects alternate; the root container is at depth d
+    def nest(d: Int): JValue =
+      (1 to d).foldLeft(JNum(1): JValue)((v, i) => if (i % 2 == 0) JArr.of(v) else JObj.of("a" -> v))
+    for (d <- Seq(1, 999, 1000, 1001, 2000, 200000)) {
+      val v = nest(d)
+      assert(Json.deeperThan(v, Json.MaxDepth) == (d > Json.MaxDepth), s"depth $d")
+      if (d > Json.MaxDepth) intercept[IllegalArgumentException](v.render)
+      else assert(Json.parse(v.render) == v, s"depth $d")
+    }
+  }
 }
 
 class WktWkbSpec extends AnyFunSuite {

@@ -3,7 +3,7 @@ package graft.functions
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
@@ -347,5 +347,27 @@ class DecodeDifferentialSpec extends AnyFunSuite {
     val got = df.select(codecs.geojsonFeatures(col("t")),
       st.geomFromGeoJson(get_json_object(col("t"), "$.geometry"))).collect()
     assert(got.forall(r => r.isNullAt(0) && r.isNullAt(1)))
+  }
+
+  test("GPX/KML names nested past Json.MaxDepth give null from gpx/kml_to_geojson, not a stack overflow") {
+    def gpx(d: Int) = s"""<gpx><wpt lat="1" lon="2"><name>${"<a>" * d}x${"</a>" * d}</name></wpt></gpx>"""
+    def kml(d: Int) = s"<kml><Document><Placemark><name>${"<a>" * d}x${"</a>" * d}</name>" +
+      "<Point><coordinates>1,2</coordinates></Point></Placemark></Document></kml>"
+    def sha(v: Any): String = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(v.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // a name nested 996 deep makes a tree exactly Json.MaxDepth deep, which
+    // prints byte for byte as the unbounded printer printed it (digests of
+    // its output)
+    Seq(GpxCodec.gpx2Geojson(gpx(996)), KmlCodec.kml2Geojson(kml(996))).foreach { t =>
+      assert(Json.deeperThan(t, Json.MaxDepth - 1) && !Json.deeperThan(t, Json.MaxDepth))
+    }
+    assert(sha(GpxToGeojson(Literal(gpx(996))).eval()) ==
+      "29885d4fbba1901831221a0bf4bf5172672b97055349b91fa27baa51fe7fae0b")
+    assert(sha(KmlToGeojson(Literal(kml(996))).eval()) ==
+      "387d2448e0eb1bcee49d4e1036e31a59a0521aa7c685c3b9c98144e43c654182")
+    for (d <- Seq(997, 2000, 20000, 200000)) {
+      assert(GpxToGeojson(Literal(gpx(d))).eval() == null, s"gpx name nested $d deep")
+      assert(KmlToGeojson(Literal(kml(d))).eval() == null, s"kml name nested $d deep")
+    }
   }
 }

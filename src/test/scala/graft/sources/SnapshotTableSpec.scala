@@ -1,9 +1,69 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{st, SparkTestSession}
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.parquet.hadoop.ParquetOutputCommitter
+
+/** A batch's manifest entry as a commit computed it before the Parquet
+  * writer reported its stats: the written files read back in one
+  * aggregation keyed by (file, bucket). Kept only here, as the oracle for
+  * the writer's stats. */
+object OldReadBack {
+  import SnapshotTable.{Batch, BucketStat, FileStat}
+
+  def batch(spark: SparkSession, table: String, batchId: String, schema: StructType,
+      bucketCol: String): Batch = {
+    val batchDir = Paths.get(table, "data", s"b$batchId")
+    val dataCols = schema.fieldNames.toSeq
+    val written = spark.read.schema(schema).parquet(batchDir.toString)
+      .select(dataCols.map(col): _*)
+    val relMarker = s"/b$batchId/"
+    val fineStats = written
+      .groupBy(input_file_name().as("f"), col(bucketCol).as("bucket"))
+      .agg(count(lit(1)).as("rows"),
+        expr(s"bit_xor(xxhash64(${written.columns.mkString(", ")}))").as("fp"))
+      .collect().map { r =>
+        val uri = r.getString(0)
+        (uri.substring(uri.lastIndexOf(relMarker) + relMarker.length),
+          r.getLong(1), r.getLong(2), r.getLong(3))
+      }
+    val bucketStats = fineStats.groupBy(_._2).map { case (bucket, xs) =>
+      BucketStat(bucket, xs.map(_._3).sum, xs.map(_._4).foldLeft(0L)(_ ^ _))
+    }.toVector.sortBy(_.bucket)
+    val dataFileStats = fineStats.groupBy(_._1).map { case (rel, xs) =>
+      rel -> FileStat(rel, xs.map(_._2).min, xs.map(_._2).max, xs.map(_._3).sum)
+    }.toMap
+    val walk = Files.walk(batchDir)
+    val files =
+      try walk.iterator().asScala
+        .filter(p => p.getFileName.toString.endsWith(".parquet"))
+        .map(p => batchDir.relativize(p).toString)
+        .toVector.sorted
+      finally walk.close()
+    val fileStats = files.map(f => dataFileStats.getOrElse(f, FileStat(f, 0L, -1L, 0L)))
+    Batch(batchId, files, bucketStats.map(_.rows).sum,
+      bucketStats.map(_.fingerprint).foldLeft(0L)(_ ^ _), bucketStats, fileStats)
+  }
+}
+
+/** Parquet's committer, plus a hook run on the output dir once the job has
+  * committed: lets a spec change the files a write leaves on disk. */
+class TamperingCommitter(out: org.apache.hadoop.fs.Path, ctx: TaskAttemptContext)
+    extends ParquetOutputCommitter(out, ctx) {
+  override def commitJob(job: JobContext): Unit = {
+    super.commitJob(job)
+    TamperingCommitter.onCommit(Paths.get(out.toUri))
+  }
+}
+object TamperingCommitter {
+  @volatile var onCommit: Path => Unit = _ => ()
+}
 
 class SnapshotTableSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -17,6 +77,22 @@ class SnapshotTableSpec extends AnyFunSuite {
       .select(col("id"),
         st.mix64(col("id")).as("payload"),
         pmod(st.mix64(col("id") + 7), lit(64L)).as("bucket"))
+
+  /** 20,000 ids whose bucket is a cell id at `res` (the zOrderRes contract). */
+  private def cellDf(res: Int) =
+    spark.range(0, 20000, 1, 8)
+      .select(col("id"),
+        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
+        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
+      .select(col("id"), st.cellId(col("lon"), col("lat"), res).as("bucket"))
+
+  /** Every batch of the current snapshot carries the entry the old
+    * read-back computes from its files: files, rows, fingerprint,
+    * per-bucket and per-file stats. */
+  private def assertStatsAsReadBack(dir: String, schema: StructType): Unit =
+    SnapshotTable.currentSnapshot(dir).batches.foreach { b =>
+      assert(b == OldReadBack.batch(spark, dir, b.batchId, schema, "bucket"), s"batch ${b.batchId}")
+    }
 
   test("commit + read-back + lineage metrics") {
     val dir = freshDir()
@@ -34,12 +110,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("manifest file skipping: readRange prunes files under z-order layout") {
     val dir = freshDir()
-    // cell-id buckets at res 5 (the zOrderRes layout contract)
-    val df = spark.range(0, 20000, 1, 8)
-      .select(col("id"),
-        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
-        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
-      .select(col("id"), st.cellId(col("lon"), col("lat"), 5).as("bucket"))
+    val df = cellDf(5)
     assert(SnapshotTable.commitBatch(df, dir, "b0", "bucket", Seq("id"),
       numPartitions = 8, zOrderRes = 5))
     val snap = SnapshotTable.currentSnapshot(dir)
@@ -133,11 +204,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("compact preserves z-order fileStats: readRange still skips files") {
     val dir = freshDir()
-    val df = spark.range(0, 20000, 1, 8)
-      .select(col("id"),
-        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
-        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
-      .select(col("id"), st.cellId(col("lon"), col("lat"), 5).as("bucket"))
+    val df = cellDf(5)
     assert(SnapshotTable.commitBatch(df.filter(col("id") < 10000), dir, "b0", "bucket",
       Seq("id"), numPartitions = 8, zOrderRes = 5))
     assert(SnapshotTable.commitBatch(df.filter(col("id") >= 10000), dir, "b1", "bucket",
@@ -158,11 +225,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   test("manifest bounds above 2^60 are exact: readRange finds every file-edge cell") {
     val dir = freshDir()
     // res-7 cell ids are > 2^60: as JSON doubles they rounded to multiples of 256
-    val df = spark.range(0, 20000, 1, 8)
-      .select(col("id"),
-        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
-        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
-      .select(col("id"), st.cellId(col("lon"), col("lat"), 7).as("bucket"))
+    val df = cellDf(7)
     assert(SnapshotTable.commitBatch(df, dir, "b0", "bucket", Seq("id"),
       numPartitions = 8, zOrderRes = 7))
     val counts = df.groupBy("bucket").count().as[(Long, Long)].collect().toMap
@@ -327,5 +390,133 @@ class SnapshotTableSpec extends AnyFunSuite {
           java.security.MessageDigest.getInstance("SHA-256").digest(Files.readAllBytes(p))))
     }
     assert(bytes(a) == bytes(b))
+  }
+
+  test("writer stats equal the read-back's: z-order and hash layouts, files split by maxRecordsPerFile") {
+    val df = cellDf(5)
+    def commitBoth(): (String, String) = {
+      val (z, h) = (freshDir(), freshDir())
+      assert(SnapshotTable.commitBatch(df, z, "b0", "bucket", Seq("id"), numPartitions = 8, zOrderRes = 5))
+      assert(SnapshotTable.commitBatch(df, h, "b0", "bucket", Seq("id"), numPartitions = 8))
+      assertStatsAsReadBack(z, df.schema)
+      assertStatsAsReadBack(h, df.schema)
+      (z, h)
+    }
+    def files(d: String) = SnapshotTable.currentSnapshot(d).batches.head.files
+    val (z, h) = commitBoth()
+    val key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "700")
+    val (zSplit, hSplit) = try commitBoth() finally spark.conf.unset(key)
+    // several files per z-order block dir and per hash partition
+    assert(files(zSplit).groupBy(_.takeWhile(_ != '/')).exists(_._2.size > 1))
+    assert(files(zSplit).size > files(z).size && files(hSplit).size > files(h).size)
+    assert(SnapshotTable.tableFingerprint(zSplit) == SnapshotTable.tableFingerprint(z))
+  }
+
+  test("writer stats equal the read-back's: nulls and binary columns outside the bucket column") {
+    val df = cellDf(5)
+      .withColumn("blob", when(col("id") % 5 === 0, lit(null).cast("binary"))
+        .otherwise(st.mix64(col("id")).cast("string").cast("binary")))
+      .withColumn("note", when(col("id") % 3 === 0, lit(null).cast("string"))
+        .otherwise(concat(lit("n"), col("id").cast("string"))))
+      .withColumn("x", when(col("id") % 7 === 0, lit(null).cast("double"))
+        .otherwise(col("id").cast("double") / 3))
+    val (z, h) = (freshDir(), freshDir())
+    assert(SnapshotTable.commitBatch(df, z, "b0", "bucket", Seq("id"), numPartitions = 8, zOrderRes = 5))
+    assert(SnapshotTable.commitBatch(df, h, "b0", "bucket", Seq("id"), numPartitions = 8))
+    assertStatsAsReadBack(z, df.schema)
+    assertStatsAsReadBack(h, df.schema)
+    assert(SnapshotTable.tableFingerprint(z) == SnapshotTable.tableFingerprint(h))
+  }
+
+  test("writer stats equal the read-back's: empty input") {
+    val (z, h) = (freshDir(), freshDir())
+    val empty = cellDf(5).filter(col("id") < 0)
+    assert(SnapshotTable.commitBatch(empty, z, "b0", "bucket", Seq("id"), numPartitions = 8, zOrderRes = 5))
+    assert(SnapshotTable.commitBatch(batchDf(0, 0, 2), h, "b0", "bucket", Seq("id"), numPartitions = 4))
+    assertStatsAsReadBack(z, empty.schema)
+    assertStatsAsReadBack(h, batchDf(0, 0, 2).schema)
+    assert(SnapshotTable.tableFingerprint(z) == ((0L, 0L)) && SnapshotTable.tableFingerprint(h) == ((0L, 0L)))
+  }
+
+  test("writer stats equal the read-back's: two concurrent commits with distinct batch ids") {
+    val dir = freshDir()
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq("p0" -> batchDf(0, 4000, 4), "p1" -> batchDf(1, 3000, 3)).map { case (id, df) =>
+      new Thread(() =>
+        try SnapshotTable.commitBatch(df, dir, id, "bucket", Seq("id"), numPartitions = 4)
+        catch { case t: Throwable => errs.add(t); () })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errs.isEmpty, s"concurrent commit failed: ${errs.peek()}")
+    assert(SnapshotTable.currentSnapshot(dir).batchIds == Set("p0", "p1"))
+    assertStatsAsReadBack(dir, batchDf(0, 1, 1).schema)
+  }
+
+  test("writer stats equal the read-back's: compact; compact rejects a content mismatch") {
+    val dir = freshDir()
+    val df = cellDf(5)
+    (0 until 3).foreach { b =>
+      assert(SnapshotTable.commitBatch(df.filter(col("id") % 3 === b), dir, s"b$b", "bucket", Seq("id"),
+        numPartitions = 8, zOrderRes = 5))
+    }
+    assert(SnapshotTable.compact(spark, dir, "bucket", Seq("id"), numPartitions = 8, zOrderRes = 5))
+    assertStatsAsReadBack(dir, df.schema)
+    // a source manifest whose fingerprint disagrees with its files: the
+    // rewritten content does not match it, so compact throws and publishes
+    // nothing
+    val bad = freshDir()
+    (0 until 2).foreach { b =>
+      assert(SnapshotTable.commitBatch(batchDf(b, 500, 2), bad, s"b$b", "bucket", Seq("id")))
+    }
+    val manifest = Paths.get(bad, "snapshots", "v2.json")
+    Files.writeString(manifest, Files.readString(manifest)
+      .replaceFirst("\"fingerprint\":\"[0-9a-f]+\"", "\"fingerprint\":\"1234\""))
+    val e = intercept[IllegalStateException] {
+      SnapshotTable.compact(spark, bad, "bucket", Seq("id"), numPartitions = 2)
+    }
+    assert(e.getMessage.contains("content mismatch"))
+    assert(SnapshotTable.currentVersion(bad) == 2 && !Files.exists(Paths.get(bad, "data", "bc3")))
+  }
+
+  test("a commit whose files on disk are not the files the writer reported throws and publishes nothing") {
+    val dir = freshDir()
+    assert(SnapshotTable.commitBatch(batchDf(0, 500, 2), dir, "b0", "bucket", Seq("id")))
+    val key = "spark.sql.parquet.output.committer.class"
+    def part(out: Path) = {
+      val listing = Files.list(out)
+      try listing.iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+      finally listing.close()
+    }
+    // a file appears in, or vanishes from, the batch dir as the job commits
+    Seq[(String, Path => Unit)](
+      "without writer stats [stray.parquet]" -> (out => Files.createFile(out.resolve("stray.parquet"))),
+      "not on disk [part-" -> (out => Files.delete(part(out)))).foreach { case (says, tamper) =>
+      TamperingCommitter.onCommit = tamper
+      spark.conf.set(key, classOf[TamperingCommitter].getName)
+      val e =
+        try intercept[IllegalStateException] {
+          SnapshotTable.commitBatch(batchDf(1, 500, 2), dir, "b1", "bucket", Seq("id"))
+        }
+        finally { spark.conf.unset(key); TamperingCommitter.onCommit = _ => () }
+      assert(e.getMessage.contains(says), e.getMessage)
+      assert(SnapshotTable.currentVersion(dir) == 1 && !Files.exists(Paths.get(dir, "data", "bb1")))
+    }
+    assert(SnapshotTable.commitBatch(batchDf(1, 500, 2), dir, "b1", "bucket", Seq("id")))
+    assert(SnapshotTable.read(spark, dir).count() == 1000)
+  }
+
+  test("readRange/readBuckets that select no file give an empty frame with the table's columns") {
+    val dir = freshDir()
+    assert(SnapshotTable.commitBatch(cellDf(5), dir, "b0", "bucket", Seq("id"),
+      numPartitions = 8, zOrderRes = 5))
+    val schema = SnapshotTable.read(spark, dir).schema
+    val (byRange, selected, total) = SnapshotTable.readRange(spark, dir, Long.MaxValue - 1, Long.MaxValue)
+    val (byBuckets, selected2, _) = SnapshotTable.readBuckets(spark, dir, Seq(-1L))
+    assert(selected == 0 && selected2 == 0 && total > 0)
+    Seq(byRange, byBuckets).foreach { f =>
+      assert(f.schema == schema)
+      assert(f.filter(col("bucket") >= 0L).count() == 0)
+    }
   }
 }
