@@ -197,8 +197,8 @@ object CellIndex {
     * When the bbox spans more than `maxCells` cells the resolution is
     * lowered until it fits. Cell ids encode their resolution, so a
     * coarsened cover never equals a `res0` point cell: equi-joining it
-    * against points keyed at `res0` silently loses every row. Joins use
-    * [[coverAtMost]] instead, which fails rather than coarsens.
+    * against points keyed at `res0` silently loses every row. The PIP join
+    * uses [[coverAt]] at its own resolution instead.
     */
   def cover(g: Geom, res0: Int, maxCells: Int = 4096): Array[Long] = {
     var r = res0
@@ -213,18 +213,6 @@ object CellIndex {
     val x0 = scaleX(minx, n); val x1 = scaleX(maxx, n)
     val y0 = scaleY(miny, n); val y1 = scaleY(maxy, n)
     (x1 - x0 + 1) * (y1 - y0 + 1)
-  }
-
-  /** [[coverAt]] for cell equi-joins keyed at `res`: fails with a clear
-    * error when the cover would exceed `maxCells`, where [[cover]] would
-    * coarsen it into cells no point at `res` can match. */
-  def coverAtMost(g: Geom, res: Int, maxCells: Int): Array[Long] = {
-    val n = coverCount(g, res)
-    require(n <= maxCells,
-      s"cell cover of $n cells at res $res exceeds maxCells=$maxCells; a coarser cover would " +
-        "match no point cell and drop rows silently. Use SpatialOps.pipJoin with " +
-        "broadcastPolys = true (covers at the join resolution), a lower res or a larger maxCells")
-    coverAt(g, res)
   }
 
   /** Hard ceiling on a single cover's cell count: beyond this the array

@@ -391,8 +391,4 @@ object Kernels {
   /** Covering cells of a WKB geometry (superset cover; maxCells coarsens). */
   def cellCover(wkb: Array[Byte], res: Int, maxCells: Int): Array[Long] =
     CellIndex.cover(Wkb.read(wkb), res, maxCells)
-
-  /** Covering cells at exactly `res`; above maxCells it fails, never coarsens. */
-  def cellCoverAtMost(wkb: Array[Byte], res: Int, maxCells: Int): Array[Long] =
-    CellIndex.coverAtMost(Wkb.read(wkb), res, maxCells)
 }

@@ -1,13 +1,14 @@
 package graft.core
 
-/** A polygon dictionary prepared once for point-in-polygon lookups: the
-  * build side of the broadcast [[graft.operators.SpatialOps.pipJoin]].
+/** A polygon dictionary prepared once for point-in-polygon lookups: what
+  * each task of the PIP join ([[graft.plans.PipJoinExec]]) builds from the
+  * broadcast polygon rows.
   *
   * Each polygon is decoded once into flat coordinate arrays (parts → rings
   * → vertices, CSR offsets), and its cover cells at the join resolution go
   * into a sorted cell → polygon table (CSR). A lookup encodes the point's
   * cell, binary-searches the table and ray-casts only the polygons listed
-  * there. Size is O(cells + vertices): the cell-join form instead carries
+  * there. Size is O(cells + vertices), where a cell equi-join would carry
   * each polygon's whole WKB on every one of its cover-cell rows.
   *
   * The cover is [[CellIndex.coverAt]] at `res` — every cell of the bbox,

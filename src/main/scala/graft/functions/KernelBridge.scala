@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{Kernels, PipIndex}
+import graft.core.Kernels
 
 /** Static forwarders callable from generated Java (Janino) so the dedup/ANN
   * kernel expressions implement doGenCode instead of CodegenFallback — a
@@ -32,16 +31,6 @@ object KernelBridge {
 
   def cellCover(wkb: Array[Byte], res: Int, maxCells: Int): ArrayData =
     new GenericArrayData(Kernels.cellCover(wkb, res, maxCells))
-
-  def cellCoverAtMost(wkb: Array[Byte], res: Int, maxCells: Int): ArrayData =
-    new GenericArrayData(Kernels.cellCoverAtMost(wkb, res, maxCells))
-
-  private val NoPolygons: ArrayData = UnsafeArrayData.fromPrimitiveArray(Array.emptyIntArray)
-
-  def pipMatches(index: PipIndex, lon: Double, lat: Double): ArrayData = {
-    val m = index.matches(lon, lat)
-    if (m.length == 0) NoPolygons else UnsafeArrayData.fromPrimitiveArray(m)
-  }
 
   def shingleHashes(text: UTF8String, shingleLen: Int): ArrayData =
     new GenericArrayData(Kernels.shingleHashes(text.toString, shingleLen))

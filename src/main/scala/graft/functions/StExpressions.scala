@@ -10,9 +10,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import org.apache.spark.broadcast.Broadcast
-
-import graft.core.{GeoJson, Geom, JArr, JNull, JNum, JObj, JValue, Json, Kernels, PipIndex, Wkb, Wkt}
+import graft.core.{GeoJson, Geom, JArr, JNull, JNum, JObj, JValue, Json, Kernels, Wkb, Wkt}
 
 /** Spatial Catalyst expressions. Hot scalar kernels (cell id, PIP, point
   * synth, distances, mixing) generate code via static calls into
@@ -126,25 +124,18 @@ case class StCellRect(cell: Expression, kx: Expression, ky: Expression)
   override def prettyName: String = "st_cellrect"
 }
 
-/** st_cellCover(wkb, res) → Array[Long] — covering cells (superset). With
-  * `atMost`, the cover stays at `res` and fails above maxCells instead of
-  * coarsening (the form cell equi-joins need). */
-case class StCellCover(geom: Expression, res: Expression, maxCells: Expression,
-    atMost: Boolean = false)
+/** st_cellCover(wkb, res) → Array[Long] — covering cells (superset). */
+case class StCellCover(geom: Expression, res: Expression, maxCells: Expression)
     extends TernaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def first: Expression = geom
   override def second: Expression = res
   override def third: Expression = maxCells
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val (wkb, r, m) = (a.asInstanceOf[Array[Byte]], b.asInstanceOf[Int], c.asInstanceOf[Int])
-    new GenericArrayData(if (atMost) Kernels.cellCoverAtMost(wkb, r, m) else Kernels.cellCover(wkb, r, m))
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (atMost) "cellCoverAtMost" else "cellCover"
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.KernelBridge.$fn($a, $b, $c)")
-  }
+  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
+    new GenericArrayData(Kernels.cellCover(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Int], c.asInstanceOf[Int]))
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.KernelBridge.cellCover($a, $b, $c)")
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
     copy(geom = f, res = s, maxCells = t)
   override def prettyName: String = "st_cellcover"
@@ -276,30 +267,6 @@ case class StContains(geom: Expression, lon: Expression, lat: Expression)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
     copy(geom = f, lon = s, lat = t)
   override def prettyName: String = "st_contains"
-}
-
-/** st_pipmatches(lon, lat) → Array[Int] — indices of the polygons of a
-  * broadcast [[PipIndex]] that contain the point (the `polys` row order the
-  * index was built from). Generated code reads the broadcast value once per
-  * task into mutable state; not registered for SQL, since the index is a
-  * driver-side object ([[graft.operators.SpatialOps.pipJoin]] builds it). */
-case class StPipMatches(lon: Expression, lat: Expression, index: Broadcast[PipIndex])
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def left: Expression = lon
-  override def right: Expression = lat
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KernelBridge.pipMatches(index.value, a.asInstanceOf[Double], b.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bc = ctx.addReferenceObj("pipIndexBroadcast", index, classOf[Broadcast[_]].getName)
-    val cls = classOf[PipIndex].getName
-    val idx = ctx.addMutableState(cls, "pipIndex", v => s"$v = ($cls) $bc.value();")
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.KernelBridge.pipMatches($idx, $a, $b)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(lon = l, lat = r)
-  override def prettyName: String = "st_pipmatches"
 }
 
 /** st_haversine(lon1, lat1, lon2, lat2) → meters. */
@@ -665,8 +632,8 @@ object st {
     col(StCellShell(asL(ex(cell)), asI(ex(kLo)), asI(ex(kHi))))
   def cellRect(cell: Column, kx: Column, ky: Column): Column =
     col(StCellRect(asL(ex(cell)), asI(ex(kx)), asI(ex(ky))))
-  def cellCover(geom: Column, res: Int, maxCells: Int = 4096, atMost: Boolean = false): Column =
-    col(StCellCover(ex(geom), Literal(res), Literal(maxCells), atMost))
+  def cellCover(geom: Column, res: Int, maxCells: Int = 4096): Column =
+    col(StCellCover(ex(geom), Literal(res), Literal(maxCells)))
   def point(lon: Column, lat: Column): Column =
     col(StPoint(asD(ex(lon)), asD(ex(lat))))
   def x(g: Column): Column = col(StX(ex(g)))
@@ -681,8 +648,6 @@ object st {
   def y(g: Column): Column = col(StY(ex(g)))
   def contains(geom: Column, lon: Column, lat: Column): Column =
     col(StContains(ex(geom), asD(ex(lon)), asD(ex(lat))))
-  def pipMatches(lon: Column, lat: Column, index: Broadcast[PipIndex]): Column =
-    col(StPipMatches(asD(ex(lon)), asD(ex(lat)), index))
   def haversine(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
     col(StHaversine(asD(ex(lon1)), asD(ex(lat1)), asD(ex(lon2)), asD(ex(lat2))))
   def sqDist(x1: Column, y1: Column, x2: Column, y2: Column): Column =

@@ -1,13 +1,13 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.functions.st
-import graft.core.PipIndex
+import graft.plans.{PipJoin, PipJoinStrategy}
 
 /** Distributed spatial operators, built Spark-first (SURVEY.md §2.3 J5–J7,
   * §2.6 O4): declarative plans over the cell index; Catalyst/AQE pick
@@ -15,16 +15,11 @@ import graft.core.PipIndex
   * can't know better.
   *
   * Scale design notes (100 TB target):
-  *  - PIP join is never a theta/cross join. Points carry exactly one cell
-  *    each, so no post-join dedup is needed. Small polygon dictionaries are
-  *    collected once and prepared into a broadcast [[graft.core.PipIndex]]
-  *    (flat coordinates + sorted cell → polygon table, O(cells + vertices)):
-  *    each point looks up its cell and ray-casts only the polygons listed
-  *    there, and the attribute rows (no geometry) are broadcast-joined back.
-  *    Dictionaries too big for the driver use the cell-prefilter equi-join
-  *    + exact residual (polygon side exploded to its cover cells, sort-merge
-  *    on cell) with optional explicit salting for hot cells (skew rule in
-  *    BASELINE.json).
+  *  - PIP join is never a theta/cross join: one [[graft.plans.PipJoin]]
+  *    node, built by [[pipJoin]] and the SQL rule, broadcasts the polygons
+  *    once; each point looks up its one cell in a prepared
+  *    [[graft.core.PipIndex]] and ray-casts only the polygons listed there.
+  *    Polygon sets too large to broadcast fail at Spark's broadcast limits.
   *  - kNN is ring expansion: a handful of bounded distributed passes, each an
   *    equi-join on cell; stragglers (sparse regions) escalate ring radius
   *    geometrically. No per-row driver loops.
@@ -41,51 +36,29 @@ object SpatialOps {
 
   /** Point-in-polygon join: each point row joined to every polygon containing
     * it (`st.contains` semantics). `polys` must have (`idCols`..., `geomCol`:
-    * WKB). Returns point rows + polygon id columns.
+    * WKB). Returns point rows + all `polys` columns but `geomCol`.
     *
-    * @param broadcastPolys (default) COLLECTS `polys` to the driver when
-    *   `pipJoin` is called and prepares a [[graft.core.PipIndex]] at `res`,
-    *   broadcast once: decoded coordinates plus the cell → polygon table,
-    *   O(cells + vertices) — e.g. country outlines of 10⁴ vertices over
-    *   thousands of cells stay a few MB, where broadcasting the polygon's
-    *   WKB on every cover-cell row reached gigabytes. Covers stay at `res`
-    *   (never coarsened), so large polygons are exact; a single cover above
-    *   [[graft.core.CellIndex.MaxCoverCells]] fails here. The broadcast is
-    *   never destroyed: the returned frame may re-execute (streaming
-    *   micro-batches, re-used plans), and Spark's ContextCleaner reclaims
-    *   it once the frame is unreachable. `polys` must be a batch frame;
-    *   `points` may stream.
-    *   When false — dictionaries too big for the driver — a sort-merge join
-    *   on `cell` is used (combine with [[saltCells]] for hot-cell skew); a
-    *   polygon whose cover at `res` exceeds 4096 cells fails the query with
-    *   a clear error rather than coarsening into cells no point can match.
+    * Builds the [[graft.plans.PipJoin]] node that the SQL rule also builds,
+    * and runs no job. `polys` is broadcast once, and each task prepares a
+    * [[graft.core.PipIndex]] at `res` from it (covers stay at `res`, so
+    * large polygons are exact; one cover above
+    * [[graft.core.CellIndex.MaxCoverCells]] fails the query). `points` may
+    * stream; `polys` must be a batch frame. Polygon sets too large to
+    * broadcast fail loudly at Spark's broadcast limits
+    * (`spark.driver.maxResultSize`, the broadcast table's size and row caps).
     */
   def pipJoin(
       points: DataFrame, lon: Column, lat: Column,
       polys: DataFrame, geomCol: String,
-      res: Int,
-      broadcastPolys: Boolean = true): DataFrame =
-    if (broadcastPolys) {
-      val spark = points.sparkSession
-      val rows = polys.collect()
-      val g = polys.schema.fieldIndex(geomCol)
-      val index = PipIndex.build(rows.map(r => if (r.isNullAt(g)) null else r.getAs[Array[Byte]](g)), res)
-      val bc = spark.sparkContext.broadcast(index)
-      val attrSchema = StructType(polys.schema.fields.patch(g, Nil, 1))
-        .add("__pidx", IntegerType, nullable = false)
-      val attrs = spark.createDataFrame(
-        rows.indices.map(i => Row.fromSeq(rows(i).toSeq.patch(g, Nil, 1) :+ i)).asJava, attrSchema)
-      points.withColumn("__pidx", explode(st.pipMatches(lon, lat, bc)))
-        .join(broadcast(attrs), "__pidx")
-        .drop("__pidx")
-    } else {
-      val polyCells = polys
-        .withColumn("__cell", explode(st.cellCover(col(geomCol), res, atMost = true)))
-      points.withColumn("__cell", st.cellId(lon, lat, res))
-        .join(polyCells, "__cell")
-        .filter(st.contains(col(geomCol), lon, lat))
-        .drop("__cell", geomCol)
-    }
+      res: Int): DataFrame = {
+    val spark = points.sparkSession
+    PipJoinStrategy.setup(spark)
+    val xy = Bridge.plan(points.select(lon.cast("double"), lat.cast("double")))
+      .asInstanceOf[Project].projectList.map { case Alias(e, _) => e; case e => e }
+    // analysis gives a self-join's polygon side fresh attribute ids
+    val geom = Bridge.plan(polys).output(polys.schema.fieldIndex(geomCol))
+    Bridge.frame(spark, PipJoin(Bridge.plan(points), Bridge.plan(polys), xy(0), xy(1), geom, res, emitGeom = false))
+  }
 
   /** Cell equi-join with explicit salting for hot cells (explicit skew
     * handling mandated by BASELINE.json; AQE skew-join also stays on).

@@ -33,7 +33,10 @@ import StatsParquetFormat.FileBucketStat
   * gives:
   *
   *  - exact resume: a re-run skips batches already in the manifest and
-  *    produces a byte-identical table (checkpoint/resume mandate)
+  *    converges to the same table: manifests, fingerprints and rows are
+  *    identical across runs. Data file bytes are identical only within one
+  *    JVM: Parquet footers list each column chunk's encodings in an order
+  *    that can differ between JVM runs (checkpoint/resume mandate)
   *  - per-partition lineage + metrics for the scaling/byte-match gates
   *  - snapshot isolation: readers list files from a manifest version, never
   *    the directory (orphan files from killed writers are invisible)

@@ -151,6 +151,5 @@ class PipIndexSpec extends AnyFunSuite {
       val (x, y) = (rnd.nextDouble() * 339.9 - 169.95, rnd.nextDouble() * 159.9 - 79.95)
       assert(idx.matches(x, y).toSeq == Seq(0))
     }
-    intercept[IllegalArgumentException](CellIndex.coverAtMost(rect, res, 4096))
   }
 }

@@ -66,30 +66,6 @@ class StExpressionsSpec extends AnyFunSuite {
     }
   }
 
-  test("st_pipmatches over a broadcast PipIndex == PipIndex.matches, codegen and interpreted") {
-    val wkbs = Array(
-      Wkb.write(Wkt.parse("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 2 4, 4 4, 4 2, 2 2))")),
-      null,
-      Wkb.write(Wkt.parse("POLYGON ((5 5, 20 5, 12 20, 5 5))")))
-    val idx = PipIndex.build(wkbs, 6)
-    val bc = spark.sparkContext.broadcast(idx)
-    val df = spark.range(2000).select(
-        (pmod(st.mix64($"id"), lit(25000L)).cast("double") / 1000.0 - 2.0).as("lon"),
-        (pmod(st.mix64($"id" + 5), lit(25000L)).cast("double") / 1000.0 - 2.0).as("lat"))
-      .withColumn("m", st.pipMatches($"lon", $"lat", bc))
-    assert(df.queryExecution.executedPlan.toString.contains("*("), "expected whole-stage codegen")
-    val rows = df.collect()
-    rows.foreach { r =>
-      assert(r.getSeq[Int](2) == idx.matches(r.getDouble(0), r.getDouble(1)).toSeq)
-    }
-    assert(rows.exists(_.getSeq[Int](2) == Seq(0, 2)), "overlap of polygons 0 and 2 not hit")
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val interp = StPipMatches(Literal(7.0), Literal(7.0), bc).eval().asInstanceOf[ArrayData]
-    assert(interp.toIntArray().toSeq == Seq(0, 2))
-    assert(StPipMatches(Literal(null, org.apache.spark.sql.types.DoubleType), Literal(7.0), bc).eval() == null)
-  }
-
   test("SQL registration: st_* callable from spark.sql") {
     val r = spark.sql(
       "SELECT st_cellid(121.5d, 25.0d, 12) AS c, st_x(st_point(1.5d, 2.5d)) AS x, " +

@@ -1,6 +1,11 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{st, SparkTestSession}
@@ -34,11 +39,15 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(brute.nonEmpty)
   }
 
-  /** Messages of `e` and its causes. */
-  private def messages(e: Throwable): Seq[String] =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+  /** The reference PIP join: every point against every polygon. */
+  private def bruteJoin(pts: DataFrame, polys: DataFrame): DataFrame =
+    pts.crossJoin(polys).filter(st.contains(col("geom"), col("lon"), col("lat"))).drop("geom")
 
-  test("pipJoin: broadcast index == cell join on district polygons + random polygons") {
+  /** Every node of `df`'s executed plan, inside AQE query stages too. */
+  private def planNodes(df: DataFrame): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+
+  test("pipJoin == crossJoin + st.contains on district polygons + random polygons") {
     val rnd = new scala.util.Random(5)
     def star(cx: Double, cy: Double, r: Double, n: Int) = {
       val ps = (0 until n).map { i =>
@@ -62,18 +71,19 @@ class SpatialOpsSpec extends AnyFunSuite {
       .withColumn("lon", SpatialOps.phashLon(col("phash")))
       .withColumn("lat", SpatialOps.phashLat(col("phash")))
       .cache()
+    def rows(df: DataFrame) = df.as[(Long, Long, Double, Double, String)].collect().toSeq.sortBy(t => (t._1, t._5))
+    val brute = bruteJoin(pts, polys)
+    val want = rows(brute)
     for (res <- Seq(6, 7)) {
       val a = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res)
-      val b = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res, broadcastPolys = false)
-      assert(a.schema == b.schema)
-      def rows(df: DataFrame) = df.as[(Long, Long, Double, Double, String)].collect().toSeq.sortBy(t => (t._1, t._5))
+      assert(a.schema == brute.schema)
       val got = rows(a)
-      assert(got == rows(b), s"res $res")
+      assert(got == want, s"res $res")
       assert(got.map(_._5).distinct.size > 20, s"res $res: too few polygons hit")
     }
   }
 
-  test("pipJoin on a polygon whose cell cover would coarsen: exact, or fails loudly") {
+  test("pipJoin on the world rectangle, whose cell cover would coarsen, gives the brute-force rows") {
     val rect = Wkb.write(Wkt.parse("POLYGON ((-170 -80, 170 -80, 170 80, -170 80, -170 -80))"))
     val polys = Seq((0L, rect)).toDF("poly_id", "geom")
     val pts = spark.range(2000).select(col("id"),
@@ -81,15 +91,83 @@ class SpatialOpsSpec extends AnyFunSuite {
       (pmod(st.mix64(col("id") + 1000000), lit(159000L)).cast("double") / 1000.0 - 79.5).as("lat"))
     val got = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res = 7)
       .select("id", "poly_id").as[(Long, Long)].collect().toSet
-    val brute = pts.crossJoin(polys)
-      .filter(st.contains(col("geom"), col("lon"), col("lat")))
-      .select("id", "poly_id").as[(Long, Long)].collect().toSet
+    val brute = bruteJoin(pts, polys).select("id", "poly_id").as[(Long, Long)].collect().toSet
     assert(brute.size == 2000)
     assert(got == brute)
-    val e = intercept[Exception] {
-      SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res = 7, broadcastPolys = false).collect()
+  }
+
+  test("pipJoin: null coordinates and null geometries match nothing; no polygons gives no rows") {
+    val square = Wkb.write(Wkt.parse("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"))
+    val polys = Seq((0L, square), (1L, null), (2L, square)).toDF("poly_id", "geom")
+    val pts = Seq[(Long, Option[Double], Option[Double])](
+      (0L, Some(5.0), Some(5.0)), (1L, None, Some(5.0)), (2L, Some(5.0), None),
+      (3L, None, None), (4L, Some(20.0), Some(5.0))).toDF("id", "lon", "lat")
+    val got = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res = 6)
+      .select("id", "poly_id").as[(Long, Long)].collect().toSet
+    assert(got == Set((0L, 0L), (0L, 2L)))
+    assert(got == bruteJoin(pts, polys).select("id", "poly_id").as[(Long, Long)].collect().toSet)
+
+    val none = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys.filter(lit(false)), "geom", res = 6)
+    assert(none.schema == bruteJoin(pts, polys).schema)
+    assert(none.collect().isEmpty)
+  }
+
+  test("pipJoin of two frames from one source keeps each side's columns apart") {
+    val square = Wkb.write(Wkt.parse("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"))
+    val src = Seq[(Long, Double, Double, Array[Byte])]((1L, 5.0, 5.0, null), (2L, 50.0, 5.0, null), (3L, 0.0, 0.0, square))
+      .toDF("id", "lon", "lat", "geom")
+    val got = SpatialOps.pipJoin(src.filter(col("geom").isNull).select("id", "lon", "lat"), col("lon"), col("lat"),
+        src.filter(col("geom").isNotNull).select("id", "geom"), "geom", res = 6)
+    assert(got.columns.toSeq == Seq("id", "lon", "lat", "id"))
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(3))).toSeq == Seq((1L, 3L)))
+  }
+
+  test("pipJoin: one polygon frame joined at res 6 and res 7 in one plan, over a reused exchange") {
+    val polys = graft.EntryQueries.districtPolygons(spark)
+    val pts = seededPoints(20000).cache()
+    def at(res: Int) = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res)
+      .select(lit(res).as("res"), col("id"), col("district"))
+    val both = at(6).union(at(7))
+    val got = both.collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq.sorted
+    val want = bruteJoin(pts, polys).select("id", "district").as[(Long, String)].collect().toSeq
+    assert(want.nonEmpty)
+    assert(got == (want.map { case (i, d) => (6, i, d) } ++ want.map { case (i, d) => (7, i, d) }).sorted)
+    val nodes = planNodes(both)
+    assert(nodes.count(_.isInstanceOf[graft.plans.PipJoinExec]) == 2)
+    assert(nodes.count(_.isInstanceOf[BroadcastExchangeExec]) == 1, both.queryExecution.executedPlan)
+    assert(nodes.exists(_.isInstanceOf[ReusedExchangeExec]), both.queryExecution.executedPlan)
+  }
+
+  test("pipJoin plans one broadcast and no other join, and building it runs no job") {
+    val polys = graft.EntryQueries.districtPolygons(spark).repartition(2)
+    val pts = seededPoints(5000)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
     }
-    assert(messages(e).exists(_.contains("exceeds maxCells")), messages(e).mkString("\n"))
+    sc.addSparkListener(listener)
+    val joined = try {
+      sc.setJobGroup("pip-build", "build a pipJoin frame")
+      val df = SpatialOps.pipJoin(pts, col("lon"), col("lat"), polys, "geom", res = 7)
+      // listener events arrive in order: once the probe's job is seen, any
+      // job the build started has been seen too
+      sc.setJobGroup("pip-probe", "probe job")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("pip-probe") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("pip-probe"))
+      assert(!groups.contains("pip-build"), "building the pipJoin frame started a job")
+      df
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(joined.collect().nonEmpty)
+    val nodes = planNodes(joined)
+    assert(nodes.count(_.isInstanceOf[graft.plans.PipJoinExec]) == 1)
+    assert(nodes.count(_.isInstanceOf[BroadcastExchangeExec]) == 1, joined.queryExecution.executedPlan)
+    assert(!nodes.exists(n => n.isInstanceOf[BroadcastHashJoinExec] ||
+      n.isInstanceOf[BroadcastNestedLoopJoinExec] || n.isInstanceOf[CartesianProductExec]),
+      joined.queryExecution.executedPlan)
   }
 
   test("saltedCellJoin == plain cell join rows") {

@@ -1,6 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.st
@@ -35,13 +42,34 @@ class PipJoinRewriteSpec extends AnyFunSuite {
     (2L, Wkb.write(Wkt.parse("POLYGON ((100 10, 160 10, 160 70, 100 70, 100 10))")))
   ).toDF("poly_id", "geom")
 
-  test("st_contains theta-join is rewritten to a cell equi-join (hash, not NL)") {
-    val pts = points(2000)
-    val naive = pts.join(polys, st.contains(col("geom"), col("lon"), col("lat")))
+  /** Every node of `df`'s executed plan, inside AQE query stages too. */
+  private def planNodes(df: DataFrame): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+
+  /** `pts` ⋈ `polys` on st_contains by brute force, in a session without
+    * the extension. */
+  private def bruteRows(pts: DataFrame, polys: DataFrame, res: Int = 7): Set[(Long, Long)] = {
+    val plain = graft.functions.SparkTestSession.spark
+    import plain.implicits._
+    val p1 = plain.createDataFrame(pts.collect().toSeq.asJava, pts.schema)
+    val p2 = plain.createDataFrame(polys.collect().toSeq.asJava, polys.schema)
+    p1.crossJoin(p2).filter(st.contains(col("geom"), col("lon"), col("lat")))
+      .select("id", "poly_id").as[(Long, Long)].collect().toSet
+  }
+
+  test("st_contains theta-join is planned as one PipJoin over one broadcast (no hash join, no NL)") {
+    val naive = points(2000).join(polys, st.contains(col("geom"), col("lon"), col("lat")))
+    assert(naive.collect().nonEmpty)
+    val nodes = planNodes(naive)
     val plan = naive.queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"), plan)
-    assert(plan.contains("__pip_cell"), plan)
-    assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"), plan)
+    assert(nodes.count(_.isInstanceOf[PipJoinExec]) == 1, plan)
+    assert(nodes.count(_.isInstanceOf[BroadcastExchangeExec]) == 1, plan)
+    assert(!nodes.exists(n => n.isInstanceOf[BroadcastHashJoinExec] || n.isInstanceOf[SortMergeJoinExec] ||
+      n.isInstanceOf[BroadcastNestedLoopJoinExec] || n.isInstanceOf[CartesianProductExec]), plan)
+    // the geometry is emitted only while the plan above reads it
+    def emitted(df: DataFrame) = df.queryExecution.optimizedPlan.collect { case p: PipJoin => p.emitGeom }
+    assert(emitted(naive) == Seq(true))
+    assert(emitted(naive.select("id", "poly_id")) == Seq(false))
   }
 
   test("rewritten join rows == explicit nested-loop rows") {
@@ -67,14 +95,59 @@ class PipJoinRewriteSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
-  test("rewrite fails loudly on a polygon whose cover would coarsen") {
+  test("SQL join on the world rectangle, whose cell cover would coarsen, gives the brute-force rows") {
     val rect = Seq((0L, Wkb.write(Wkt.parse("POLYGON ((-170 -80, 170 -80, 170 80, -170 80, -170 -80))"))))
       .toDF("poly_id", "geom")
-    val e = intercept[Exception] {
-      points(200).join(rect, st.contains(col("geom"), col("lon"), col("lat"))).collect()
+    val pts = spark.range(2000).select(col("id"),
+      (pmod(st.mix64(col("id")), lit(339000L)).cast("double") / 1000.0 - 169.5).as("lon"),
+      (pmod(st.mix64(col("id") + 1000000), lit(159000L)).cast("double") / 1000.0 - 79.5).as("lat"))
+    val got = pts.join(rect, st.contains(col("geom"), col("lon"), col("lat")))
+      .select("id", "poly_id").as[(Long, Long)].collect().toSet
+    val want = bruteRows(pts, rect)
+    assert(want.size == 2000)
+    assert(got == want)
+  }
+
+  test("polygons on the left of the SQL join; other conjuncts and the geometry column survive") {
+    val pts = points(2000)
+    val joined = polys.join(pts, st.contains(col("geom"), col("lon"), col("lat")) && col("id") % 3 =!= col("poly_id"))
+    assert(joined.columns.toSeq == Seq("poly_id", "geom", "id", "lon", "lat"))
+    assert(planNodes(joined).exists(_.isInstanceOf[PipJoinExec]), joined.queryExecution.executedPlan)
+    val rows = joined.collect()
+    assert(rows.forall(r => r.getAs[Array[Byte]]("geom") != null))
+    val got = rows.map(r => (r.getLong(2), r.getLong(0))).toSet
+    val want = bruteRows(pts, polys).filter { case (id, poly) => id % 3 != poly }
+    assert(want.nonEmpty)
+    assert(got == want)
+  }
+
+  test("a malformed spark.graft.pip.res fails the query, naming the conf and the value") {
+    spark.conf.set("spark.graft.pip.res", "seven")
+    try {
+      val e = intercept[Exception] {
+        points(10).join(polys, st.contains(col("geom"), col("lon"), col("lat"))).collect()
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("spark.graft.pip.res") && t.getMessage.contains("seven")),
+        chain.map(String.valueOf).mkString("\n"))
+    } finally spark.conf.unset("spark.graft.pip.res")
+  }
+
+  test("an extension session registers each function group once over 20 queries") {
+    val reg = spark.sessionState.functionRegistry
+    // a non-capturing builder lambda is one cached instance, so its
+    // ExpressionInfo (new on every registration) is checked as well
+    def entries = Seq("st_cellid", "kml_to_geojson", "img_phash").map { name =>
+      val id = FunctionIdentifier(name)
+      (reg.lookupFunctionBuilder(id).get, reg.lookupFunction(id).get)
     }
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
-    assert(msgs.exists(_.contains("exceeds maxCells")))
+    spark.sql("SELECT st_cellid(1.0d, 2.0d, 5)").collect()
+    val before = entries
+    (1 to 20).foreach(i => spark.sql(s"SELECT st_cellid(1.0d, $i.0d, 5), kml_to_geojson(NULL)").collect())
+    entries.zip(before).foreach { case (now, was) =>
+      assert((now._1 eq was._1) && (now._2 eq was._2), s"re-registered: $was -> $now")
+    }
   }
 
   test("SQL functions injected by the extension alone") {
@@ -92,7 +165,7 @@ class PipJoinRewriteSpec extends AnyFunSuite {
     val joined = a.join(b, col("k") === col("k2") &&
       st.contains(col("geom"), lit(1.0), lit(2.0)))
     val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("__pip_cell"), plan)
+    assert(!plan.contains("PipJoin"), plan)
     assert(joined.count() > 0)
   }
 }

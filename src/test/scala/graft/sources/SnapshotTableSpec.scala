@@ -345,6 +345,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     // "crash": a partially-written orphan from batch 2
     batchDf(2, 500, 1).write.parquet(resumed + "/data/b2_tmp_orphan")
     runPipeline(resumed, 4) // b0/b1 skipped (manifest), b2/b3 written
+    // the same rows and fingerprints; file bytes match only within one JVM
+    // (Parquet footers order each column chunk's encodings per run)
     assert(SnapshotTable.tableFingerprint(full) == SnapshotTable.tableFingerprint(resumed))
     // and re-running everything is a no-op
     runPipeline(full, 4)
@@ -380,7 +382,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     val la = SnapshotTable.lineage(spark, a).orderBy("bucket").collect().toSeq
     val lb = SnapshotTable.lineage(spark, b).orderBy("bucket").collect().toSeq
     assert(la == lb)
-    // data files byte-identical (canonical sort + fixed partition count)
+    // data files byte-identical (canonical sort + fixed partition count);
+    // both writes run in this JVM, the only scope where bytes are stable
     def bytes(dir: String): Seq[String] = {
       val d = java.nio.file.Paths.get(dir, "data", "bb0")
       import scala.jdk.CollectionConverters._
