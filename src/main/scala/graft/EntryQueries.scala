@@ -641,13 +641,6 @@ object EntryQueries {
   def q26Sql: String = OracleSqlGen.q26Sql
   def q27Sql: String = OracleSqlGen.q27Sql(hexRings)
 
-  /** Manifest-level file skipping through a real query: two image batches
-    * committed into a z-ordered snapshot table, then ONE res-3 morton
-    * subtree of tiles read back through readRange — the planner lists only
-    * the files whose manifest [min,max] bucket range overlaps, and the
-    * query REQUIREs that some were skipped (holds at every SF: the subtree
-    * is one z-order block out of 8). The exact tile predicate re-applies on
-    * top of the superset scan, like every manifest prune. */
   /** The q28/q44 fixture: two z-ordered image batches committed into a
     * fresh temp snapshot table; returns the table path. */
   private def readRangeTable(s: SparkSession, dir: String): String = {
@@ -705,6 +698,12 @@ object EntryQueries {
     (loCell, loCell + (1L << (2 * (7 - 3))) - 1)
   }
 
+  /** Manifest-level file skipping through a real query: two image batches
+    * committed into a z-ordered snapshot table, then ONE res-3 morton
+    * subtree of tiles read back through readRange — a tile filter on the
+    * table's scan, whose manifest index lists only the files whose [min,max]
+    * bucket range overlaps. The query REQUIREs that the scan skipped some
+    * files (holds at every SF: the subtree is one z-order block out of 8). */
   def q28ReadRange(s: SparkSession, dir: String): DataFrame = {
     ensureRegistered(s)
     val table = readRangeTable(s, dir)
@@ -720,8 +719,7 @@ object EntryQueries {
     val (df, selected, total) = sources.SnapshotTable.readRange(s, table, loCell, hiCell)
     require(selected < total,
       s"readRange skipped no files ($selected of $total) — z-order manifest stats broken")
-    df.filter(col("tile").between(loCell, hiCell))
-      .groupBy(st.cellX(col("tile")).as("tile_x"), st.cellY(col("tile")).as("tile_y"))
+    df.groupBy(st.cellX(col("tile")).as("tile_x"), st.cellY(col("tile")).as("tile_y"))
       .agg(count(lit(1)).as("n"), count_distinct(col("phash")).as("n_phashes"))
   }
 

@@ -92,7 +92,6 @@ object XmlJson {
   final class XEl(val tag: String) {
     var attrs: Vector[(String, String)] = Vector.empty
     val children = mutable.ArrayBuffer.empty[AnyRef] // XEl | String (text)
-    def elementChildren: Iterator[XEl] = children.iterator.collect { case e: XEl => e }
     def textContent: String = {
       // fast path: the overwhelmingly common single-text-child leaf
       if (children.length == 1) children(0) match {

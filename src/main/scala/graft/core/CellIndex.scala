@@ -246,10 +246,4 @@ object CellIndex {
     java.util.Arrays.sort(out)
     out
   }
-
-  /** Max distance in degrees guaranteed covered by ring radius k at res r:
-    * a point whose true nearest neighbor is beyond this needs a larger k.
-    * (Conservative: k cells in the smaller (lat) dimension.)
-    */
-  def ringGuaranteeDeg(res: Int, k: Int): Double = k * (180.0 / (1L << res))
 }

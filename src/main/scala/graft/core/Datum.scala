@@ -41,7 +41,6 @@ object Datum {
 
   private val WgsA = 6378137.0
   private val WgsEs = derivedEs(WgsA, 298.257223563)
-  private val WgsB = (1 - 1 / 298.257223563) * WgsA
 
   /** wkt-module datumCode derivation (exact rule order). The caller needs
     * the intermediate `wgs_1984` value for the Mercator_Auxiliary_Sphere

@@ -221,10 +221,6 @@ object GeomOps {
     case _ => (Double.NaN, Double.NaN)
   }
 
-  /** bbox intersection test. */
-  def bboxIntersects(a: (Double, Double, Double, Double), b: (Double, Double, Double, Double)): Boolean =
-    a._1 <= b._3 && b._1 <= a._3 && a._2 <= b._4 && b._2 <= a._4
-
   /** Assemble shapefile-style ring soup into polygons, reproducing the
     * reference (`/root/reference/src/ShapeFile.js:336-368`): CW rings
     * (accumulator ≥ 0) start a new polygon; CCW rings are holes appended to

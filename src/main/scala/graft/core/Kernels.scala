@@ -12,7 +12,6 @@ object Kernels {
   // ---- cell index ----
 
   def cellId(lon: Double, lat: Double, res: Int): Long = CellIndex.encode(lon, lat, res)
-  def cellRes(cell: Long): Int = CellIndex.res(cell)
   def cellParentAt(cell: Long, toRes: Int): Long = CellIndex.parentAt(cell, toRes)
   def cellRing(cell: Long, k: Int): Array[Long] = CellIndex.ring(cell, k)
   def cellDisk(cell: Long, k: Int): Array[Long] = CellIndex.disk(cell, k)
@@ -20,8 +19,6 @@ object Kernels {
   def cellRect(cell: Long, kx: Int, ky: Int): Array[Long] = CellIndex.rect(cell, kx, ky)
   def cellX(cell: Long): Long = CellIndex.x(cell)
   def cellY(cell: Long): Long = CellIndex.y(cell)
-  def cellCenterLon(cell: Long): Double = CellIndex.center(cell)._1
-  def cellCenterLat(cell: Long): Double = CellIndex.center(cell)._2
 
   /** splitmix64 finalizer — deterministic key mixing (geometry derivation
     * from phash, salting, synthetic data). */

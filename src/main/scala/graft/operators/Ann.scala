@@ -18,8 +18,6 @@ object Ann {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity — single-pass kernel expression. */
   def cosine(a: Column, b: Column): Column = graft.functions.st.cosineSim(a, b)
 
@@ -72,19 +70,15 @@ object Ann {
     transform(emb, x => round(x.cast("double") * scale).cast("long"))
 
   /** Squared L2 distance between a quantized vector column and a centroid
-    * literal — exact integer arithmetic (≤ (2·scale)²·dims per row, far from
-    * overflow at embedding scale). */
-  private def qDist(q: Column, centroid: Array[Long]): Column =
-    qDistC(q, array(centroid.map(lit): _*))
-
-  /** Column form of [[qDist]] (centroid already a long-array column). */
+    * long-array column — exact integer arithmetic (≤ (2·scale)²·dims per
+    * row, far from overflow at embedding scale). */
   private def qDistC(q: Column, c: Column): Column =
     aggregate(zip_with(q, c, (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v)
 
   /** Distances of a quantized vector column to EVERY centroid of a
     * codebook, as one array column: the codebook embeds as a single 2-D
     * literal array and ONE `transform` lambda computes all k distances —
-    * semantically identical to unrolling k [[qDist]] expressions, but the
+    * semantically identical to unrolling k [[qDistC]] expressions, but the
     * expression tree (and its generated code) is k× smaller. The unrolled
     * form made plan+Janino compile time the dominant cost of every
     * cold-session k-means/PQ query (q55 cold 12.0 s vs 2.4 s warm at
@@ -292,9 +286,10 @@ object Ann {
   }
 
   /** Query a [[buildIvfIndex]] table: load the codebook sidecar, probe each
-    * query's nearest clusters, open ONLY the files whose manifest bucket
-    * range hits a probed cluster (`SnapshotTable.readBuckets` — disk-level
-    * pruning, not just a post-scan filter), and score exactly inside them.
+    * query's nearest clusters, read the probed buckets through
+    * `SnapshotTable.readBuckets` (a bucket filter whose scan opens ONLY the
+    * files whose manifest bucket range hits a probed cluster), and score
+    * exactly inside them.
     * Bit-identical to [[ivfKmeansTopK]] at the same parameters (the
     * training is deterministic; spec-pinned). Returns (result,
     * selectedFiles, totalFiles) so callers can assert the pruning. */

@@ -21,9 +21,6 @@ object TextOps {
       split(text, "(?=[\\p{P}\\p{S}])|(?<=[\\p{P}\\p{S}])|\\s+"),
       t => length(t) > 0))
 
-  /** Characters per token ≈ 4 heuristic token estimate. */
-  def tokenEstimate(text: Column): Column = ceil(length(text).cast("double") / 4.0)
-
   /** Top-k corpus vocabulary: single-space tokens (lowercased), counted
     * with map-side partial aggregation; top-k runs as TakeOrdered
     * (per-partition heaps + driver merge — never a full global sort), ties

@@ -253,18 +253,6 @@ object ImageTable {
     spark.range(0, n, 1, parts).as[Long].map(rowFor _)
   }
 
-  /** Metadata-only synthesis (no image bytes / captions) — the equivalent of
-    * a column-pruned scan of the image table for the spatial pipeline. */
-  def synthesizeMeta(spark: SparkSession, n: Long, parts: Int = 32): Dataset[ImageMeta] =
-    synthesizeMetaRange(spark, 0, n, parts)
-
-  /** Metadata synthesis for an id range [lo, hi) — batch slicing for the
-    * resumable pipeline. */
-  def synthesizeMetaRange(spark: SparkSession, lo: Long, hi: Long, parts: Int = 32): Dataset[ImageMeta] = {
-    import spark.implicits._
-    spark.range(lo, hi, 1, parts).as[Long].map(metaFor _)
-  }
-
   /** Pure-columnar metadata synthesis — stays inside whole-stage codegen
     * (no per-row JVM objects; the Dataset.map/Encoder path is allocation-
     * bound and caps multicore scaling). Bit-identical to [[metaFor]]

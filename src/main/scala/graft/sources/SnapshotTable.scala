@@ -1,12 +1,22 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, Path}
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BinaryComparison, Expression,
+  In, InSet, Literal}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.core.{Json, JValue, JObj, JArr, JStr, JNum}
 import StatsParquetFormat.FileBucketStat
@@ -40,6 +50,10 @@ import StatsParquetFormat.FileBucketStat
   *  - per-partition lineage + metrics for the scaling/byte-match gates
   *  - snapshot isolation: readers list files from a manifest version, never
   *    the directory (orphan files from killed writers are invisible)
+  *  - one scan path: every read ([[read]], [[readAt]], [[readRange]],
+  *    [[readBuckets]], [[compact]]'s source) is a Parquet scan over the
+  *    snapshot's [[ManifestIndex]], so a plain filter on the bucket column
+  *    skips files from the manifest alone, and opening a table runs no job
   */
 object SnapshotTable {
 
@@ -52,12 +66,14 @@ object SnapshotTable {
 
   final case class BucketStat(bucket: Long, rows: Long, fingerprint: Long)
   /** Iceberg-manifest-style per-file column stats: the min/max of the
-    * z-order bucket column per data file, recorded at commit so readers can
-    * skip whole files from the manifest alone (see [[readRange]]). */
+    * batch's bucket column per data file, recorded at commit so readers can
+    * skip whole files from the manifest alone (see [[ManifestIndex]]). */
   final case class FileStat(file: String, minBucket: Long, maxBucket: Long, rows: Long)
+  /** `bucketCol` names the column the file stats bound; a batch without it
+    * (older manifests) is read unpruned. */
   final case class Batch(batchId: String, files: Vector[String], rows: Long,
       fingerprint: Long, buckets: Vector[BucketStat],
-      fileStats: Vector[FileStat] = Vector.empty)
+      fileStats: Vector[FileStat] = Vector.empty, bucketCol: Option[String] = None)
   final case class Snapshot(version: Int, batches: Vector[Batch]) {
     def batchIds: Set[String] = batches.map(_.batchId).toSet
   }
@@ -80,15 +96,14 @@ object SnapshotTable {
 
   def currentSnapshot(table: String): Snapshot = {
     val v = currentVersion(table)
-    if (v == 0) Snapshot(0, Vector.empty)
-    else parseSnapshot(Files.readString(snapDir(table).resolve(s"v$v.json")))
+    if (v == 0) Snapshot(0, Vector.empty) else snapshotAt(table, v)
   }
 
   private def renderSnapshot(s: Snapshot): String =
     JObj.of(
       "version" -> JNum(s.version),
       "batches" -> JArr(s.batches.map { b =>
-        JObj.of(
+        JObj.of(Seq(
           "batchId" -> JStr(b.batchId),
           "files" -> JArr(b.files.map(JStr(_))),
           "rows" -> JNum(b.rows),
@@ -100,7 +115,7 @@ object SnapshotTable {
           "fileStats" -> JArr(b.fileStats.map { fs =>
             JObj.of("file" -> JStr(fs.file), "minBucket" -> JStr(fs.minBucket.toString),
               "maxBucket" -> JStr(fs.maxBucket.toString), "rows" -> JNum(fs.rows))
-          }))
+          })) ++ b.bucketCol.map(c => "bucketCol" -> JStr(c)): _*)
       })).render
 
   private def parseSnapshot(s: String): Snapshot = {
@@ -127,7 +142,7 @@ object SnapshotTable {
         },
         // absent in pre-round-2 manifests: falls back to no file skipping.
         // Numeric bounds (older manifests) may be rounded, so such a file
-        // keeps no stat and readRange/readBuckets read it unpruned.
+        // keeps no stat and every read lists it unpruned.
         b.get("fileStats").map(_.asInstanceOf[JArr].items.flatMap { fv =>
           val fs = fv.asInstanceOf[JObj]
           (fs("minBucket"), fs("maxBucket")) match {
@@ -135,7 +150,8 @@ object SnapshotTable {
               Some(FileStat(str(fs("file")), lo.toLong, hi.toLong, num(fs("rows")).toLong))
             case _ => None
           }
-        }).getOrElse(Vector.empty))
+        }).getOrElse(Vector.empty),
+        b.get("bucketCol").map(str))
     }
     Snapshot(num(o("version")).toInt, batches)
   }
@@ -166,7 +182,7 @@ object SnapshotTable {
     *    by the high bits of the cell's morton code — a pure function of the
     *    value that is both byte-stable AND range-clustered, so each file
     *    covers a contiguous z-order block and the manifest's per-file
-    *    [min,max] bucket stats ([[readRange]]) actually skip files.
+    *    [min,max] bucket stats ([[ManifestIndex]]) actually skip files.
     *  - otherwise: plain hash placement (byte-stable; each bucket whole in
     *    one file; no cross-file range clustering).
     */
@@ -219,7 +235,7 @@ object SnapshotTable {
         // z-order block = high bits of the cell's morton code — a pure
         // function of the value. partitionBy makes the block a DIRECTORY, so
         // each data file holds exactly one contiguous morton block: per-file
-        // [min,max] stats become tight and readRange skips precisely,
+        // [min,max] stats become tight and bucket filters skip precisely,
         // independent of how block ids hash across shuffle tasks.
         val block = graft.operators.SpatialOps.zBlock(col(bucketCol), zOrderRes, numPartitions)
         (df.withColumn("__zblock", block)
@@ -228,7 +244,7 @@ object SnapshotTable {
           Seq("__zblock"))
       } else {
         // generic buckets: hash placement (byte-stable; each bucket whole in
-        // one file) — no cross-file range clustering, readRange reads all
+        // one file) — no cross-file range clustering, range filters read all
         (df.repartition(numPartitions, col(bucketCol))
           .sortWithinPartitions((bucketCol +: sortCols).map(col): _*), Nil)
       }
@@ -252,14 +268,15 @@ object SnapshotTable {
           s"[${files.filterNot(reported).take(5).mkString(", ")}], reported files not on disk " +
           s"[${reported.diff(files.toSet).take(5).mkString(", ")}] — aborted, nothing published")
     }
-    batchOf(batchId, files, written)
+    batchOf(batchId, bucketCol, files, written)
   }
 
   /** A batch's manifest entry from its files and per-(file, bucket) rows
     * and fingerprints, which may hold several runs of one (file, bucket):
     * rows add and fingerprints XOR. A file with no rows gets an empty
     * [min > max] range, always skippable. */
-  private def batchOf(batchId: String, files: Vector[String], fine: Seq[FileBucketStat]): Batch = {
+  private def batchOf(batchId: String, bucketCol: String, files: Vector[String],
+      fine: Seq[FileBucketStat]): Batch = {
     val live = fine.filter(_.rows > 0)
     val buckets = live.groupBy(_.bucket).map { case (bucket, xs) =>
       BucketStat(bucket, xs.map(_.rows).sum, xs.map(_.fp).foldLeft(0L)(_ ^ _))
@@ -269,7 +286,7 @@ object SnapshotTable {
       FileStat(f, xs.map(_.bucket).min, xs.map(_.bucket).max, xs.map(_.rows).sum)
     })
     Batch(batchId, files, buckets.map(_.rows).sum,
-      buckets.map(_.fingerprint).foldLeft(0L)(_ ^ _), buckets, fileStats)
+      buckets.map(_.fingerprint).foldLeft(0L)(_ ^ _), buckets, fileStats, Some(bucketCol))
   }
 
   /** The per-(file, bucket) rows and fingerprints of a batch's files, read
@@ -356,10 +373,11 @@ object SnapshotTable {
     val srcRows = small.map(_.rows).sum
     val srcFp = small.map(_.fingerprint).foldLeft(0L)(_ ^ _)
     val batchId = s"c${snap.version + 1}"
-    val src = readSnapshot(spark, table, Snapshot(snap.version, small))
+    val src = open(spark, table, Snapshot(snap.version, small))
     val batch = writeBatch(src, table, batchId, bucketCol,
       sortCols, numPartitions, zOrderRes)
-    val back = batchOf(batchId, batch.files, readBack(spark, table, batchId, src.schema, bucketCol))
+    val back = batchOf(batchId, bucketCol, batch.files,
+      readBack(spark, table, batchId, src.schema, bucketCol))
     if (back.rows != srcRows || back.fingerprint != srcFp || back != batch) {
       deleteRec(Paths.get(table, "data", s"b$batchId"))
       throw new IllegalStateException(
@@ -400,9 +418,10 @@ object SnapshotTable {
 
   // ---------------- read path ----------------
 
-  /** Read the table at its current snapshot (only manifest-listed files). */
+  /** Read the table at its current snapshot: one scan over a
+    * [[ManifestIndex]], so a filter on the bucket column skips files. */
   def read(spark: SparkSession, table: String): DataFrame =
-    readSnapshot(spark, table, currentSnapshot(table))
+    open(spark, table, currentSnapshot(table))
 
   /** Time travel: read the table AS OF an earlier snapshot version —
     * manifests are immutable and retained, so any version remains readable
@@ -420,64 +439,116 @@ object SnapshotTable {
         s"${missing.map("b" + _).mkString(", ")} were vacuumed (outside the " +
         s"retention window) — only versions whose data dirs were retained " +
         s"support time travel")
-    readSnapshot(spark, table, snap)
+    open(spark, table, snap)
   }
 
   private def snapshotAt(table: String, version: Int): Snapshot =
     parseSnapshot(Files.readString(snapDir(table).resolve(s"v$version.json")))
 
-  private def readSnapshot(spark: SparkSession, table: String, snap: Snapshot): DataFrame = {
-    val paths = snap.batches.flatMap(b =>
-      b.files.map(f => Paths.get(table, "data", s"b${b.batchId}", f).toString))
-    if (paths.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(paths: _*)
+  /** A snapshot as a frame over its [[ManifestIndex]]; opening it runs no
+    * Spark job. A snapshot without files gives an empty frame. */
+  private def open(spark: SparkSession, table: String, snap: Snapshot): DataFrame = {
+    val index = ManifestIndex(table, snap)(spark.sparkContext.hadoopConfiguration)
+    if (index.files.isEmpty) spark.emptyDataFrame
+    else spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      index.dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** Manifest-level file skipping: read only the files whose recorded
-    * bucket range overlaps [lo, hi] — the planner never even lists the
-    * skipped files (coarser than, and complementary to, parquet row-group
-    * pruning). Files from pre-fileStats manifests, or whose bounds an older
-    * manifest stored as (possibly rounded) JSON numbers, are conservatively
-    * read. The caller still applies its exact predicate; this is a superset
-    * scan, like every manifest prune. Returns (frame, selectedFiles,
-    * totalFiles).
-    */
+  /** The rows whose bucket lies in [lo, hi]: [[read]] plus one filter on
+    * the manifest's bucket column. Returns (frame, selectedFiles,
+    * totalFiles); the selected files are those the frame's scan lists. */
   def readRange(spark: SparkSession, table: String, lo: Long, hi: Long): (DataFrame, Int, Int) =
-    readPruned(spark, table)(fs => fs.maxBucket >= lo && fs.minBucket <= hi)
+    readWhere(spark, table)(col(_).between(lo, hi))
 
-  /** Manifest-level file skipping for a DISCRETE bucket set (the IVF-probe
-    * shape: read only the probed clusters): keep files whose [min,max]
-    * bucket range contains ANY requested bucket. Same superset-scan
-    * contract as [[readRange]]; files without stats are read. Returns
-    * (frame, selectedFiles, totalFiles). */
+  /** The rows of a DISCRETE bucket set (the IVF-probe shape: read only the
+    * probed clusters), as [[readRange]] does for a range. */
   def readBuckets(spark: SparkSession, table: String,
-      buckets: Seq[Long]): (DataFrame, Int, Int) = {
-    val want = buckets.sorted
-    readPruned(spark, table) { fs =>
-      // first requested bucket >= minBucket, then check it is <= maxBucket
-      var a = 0; var b = want.length
-      while (a < b) { val m = (a + b) >>> 1; if (want(m) < fs.minBucket) a = m + 1 else b = m }
-      a < want.length && want(a) <= fs.maxBucket
+      buckets: Seq[Long]): (DataFrame, Int, Int) =
+    readWhere(spark, table)(col(_).isin(buckets: _*))
+
+  /** The current snapshot filtered by `pred` on its bucket column, the
+    * number of files the filtered frame's scan lists, and the snapshot's
+    * file count. A table whose batches name no single bucket column is
+    * read whole. */
+  private def readWhere(spark: SparkSession, table: String)
+      (pred: String => Column): (DataFrame, Int, Int) = {
+    val snap = currentSnapshot(table)
+    val all = open(spark, table, snap)
+    val df = snap.batches.flatMap(_.bucketCol).distinct match {
+      case Seq(c) if all.columns.contains(c) => all.where(pred(c))
+      case _ => all
     }
+    (df, df.queryExecution.sparkPlan.collectFirst {
+      case s: FileSourceScanExec => s.selectedPartitions.totalNumberOfFiles.toInt
+    }.getOrElse(0), snap.batches.map(_.files.size).sum)
   }
 
-  /** The current snapshot's files that `keep` selects by their stats, plus
-    * every file without stats. When the table has files but none is
-    * selected, the frame is empty with the table's columns. */
-  private def readPruned(spark: SparkSession, table: String)
-      (keep: FileStat => Boolean): (DataFrame, Int, Int) = {
-    val snap = currentSnapshot(table)
-    def path(b: Batch, f: String) = Paths.get(table, "data", s"b${b.batchId}", f).toString
-    val paths = snap.batches.flatMap { b =>
-      val statted = b.fileStats.map(_.file).toSet
-      (b.fileStats.filter(keep).map(_.file) ++ b.files.filterNot(statted.contains)).map(path(b, _))
+  /** The file index of one snapshot: it lists only the manifest's files
+    * (snapshot isolation) and drops a file when a conjunct on its batch's
+    * bucket column cannot hold inside the file's [minBucket, maxBucket].
+    * Only `=`, `<`, `<=`, `>`, `>=`, `In` and `InSet` against literals
+    * prune; a file without stats or bucket column is always listed. The
+    * data schema is the Spark row schema in one file's Parquet footer, read
+    * on the driver and made nullable as a Parquet scan's is. Indexes over
+    * the same snapshot are equal, so cache lookup and exchange reuse hold. */
+  private final case class ManifestIndex(table: String, snap: Snapshot)(conf: Configuration)
+      extends FileIndex {
+    val files: Vector[(FileStatus, Option[String], Option[FileStat])] = snap.batches.flatMap { b =>
+      val stats = b.fileStats.map(fs => fs.file -> fs).toMap
+      b.files.map { f =>
+        val p = new HPath(Paths.get(table, "data", s"b${b.batchId}", f).toAbsolutePath.toUri)
+        (p.getFileSystem(conf).getFileStatus(p), b.bucketCol, stats.get(f))
+      }
     }
-    val all = snap.batches.flatMap(b => b.files.map(path(b, _)))
-    val df =
-      if (paths.nonEmpty) spark.read.parquet(paths: _*)
-      else if (all.nonEmpty) spark.read.parquet(all.head).where(lit(false))
-      else spark.emptyDataFrame
-    (df, paths.length, all.length)
+
+    def dataSchema: StructType = {
+      val json = Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(files.head._1, conf)))(
+        _.getFooter.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      def nullable(t: DataType): DataType = t match {
+        case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+        case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+        case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+        case o => o
+      }
+      nullable(DataType.fromJson(json)).asInstanceOf[StructType]
+    }
+
+    def rootPaths: Seq[HPath] = files.map(_._1.getPath)
+    def inputFiles: Array[String] = rootPaths.map(_.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_._1.getLen).sum
+    def partitionSchema: StructType = new StructType()
+
+    def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.collect {
+        case (status, c, fs) if c.zip(fs).forall { case (c, fs) => dataFilters.forall(mayHold(c, fs, _)) } => status
+      }.toArray))
+
+    /** False when conjunct `e` on column `c` holds for no bucket in the
+      * file's bounds (an empty file, min > max, has none). */
+    private def mayHold(c: String, fs: FileStat, e: Expression): Boolean = {
+      val (lo, hi) = (fs.minBucket, fs.maxBucket)
+      def on(x: Expression) = x match { case a: AttributeReference => a.name == c; case _ => false }
+      def holds(op: String, v: Long) = lo <= hi && (op match {
+        case "=" => lo <= v && v <= hi
+        case "<" => lo < v
+        case "<=" => lo <= v
+        case ">" => hi > v
+        case ">=" => hi >= v
+        case _ => true
+      })
+      e match {
+        case b: BinaryComparison => (b.left, b.right) match {
+          case (a, Literal(v: Long, _)) if on(a) => holds(b.symbol, v)
+          case (Literal(v: Long, _), a) if on(a) => // `v < a` is `a > v`
+            holds(b.symbol.map { case '<' => '>'; case '>' => '<'; case ch => ch }, v)
+          case _ => true
+        }
+        case In(a, vs) if on(a) => vs.exists { case Literal(v: Long, _) => holds("=", v); case _ => true }
+        case InSet(a, vs) if on(a) => vs.exists { case v: Long => holds("=", v); case _ => true }
+        case _ => true
+      }
+    }
   }
 
   /** Lineage metrics of the current snapshot as a DataFrame. */

@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan auditor: prints executedPlan summaries for the headline queries so
-  * pushdown / broadcast / codegen spans can be inspected.
-  * runMain graft.tools.Plans [sfDir] [query ...]
+/** Plan auditor: prints the formatted physical plan of SparkEntry queries
+  * ("is the filter pushed, is the agg partial, is the join broadcast").
+  * runMain graft.tools.Plans [sfDir] [query ...] (no query names: all).
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -19,10 +19,8 @@ object Plans {
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
     qs.foreach { case (name, fn) =>
       println(s"\n========== $name ==========")
-      try {
-        val df = fn(spark, dir)
-        println(df.queryExecution.executedPlan.toString.take(4000))
-      } catch { case e: Throwable => println(s"[plan] failed: ${e.getMessage}") }
+      try fn(spark, dir).explain("formatted")
+      catch { case e: Throwable => println(s"[plan] failed: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -9,6 +9,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.parquet.hadoop.ParquetOutputCommitter
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** A batch's manifest entry as a commit computed it before the Parquet
   * writer reported its stats: the written files read back in one
@@ -48,7 +52,7 @@ object OldReadBack {
       finally walk.close()
     val fileStats = files.map(f => dataFileStats.getOrElse(f, FileStat(f, 0L, -1L, 0L)))
     Batch(batchId, files, bucketStats.map(_.rows).sum,
-      bucketStats.map(_.fingerprint).foldLeft(0L)(_ ^ _), bucketStats, fileStats)
+      bucketStats.map(_.fingerprint).foldLeft(0L)(_ ^ _), bucketStats, fileStats, Some(bucketCol))
   }
 }
 
@@ -94,12 +98,47 @@ class SnapshotTableSpec extends AnyFunSuite {
       assert(b == OldReadBack.batch(spark, dir, b.batchId, schema, "bucket"), s"batch ${b.batchId}")
     }
 
+  /** The "number of files read" of `df`'s one scan, once `df` has run. */
+  private def filesRead(df: DataFrame): Long = {
+    val scans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size == 1)
+    scans.head.metrics("numFiles").value
+  }
+
+  /** How many Spark jobs `body` starts: listener events arrive in order, so
+    * once a probe job run after `body` is seen, every job of `body` is. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("snap-body", "measured body")
+      body
+      sc.setJobGroup("snap-probe", "probe job")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("snap-probe") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("snap-probe"))
+      groups.asScala.count(_ == "snap-body")
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
   test("commit + read-back + lineage metrics") {
     val dir = freshDir()
     assert(SnapshotTable.commitBatch(batchDf(0, 5000, 8), dir, "b0", "bucket", Seq("id")))
     assert(SnapshotTable.commitBatch(batchDf(1, 3000, 8), dir, "b1", "bucket", Seq("id")))
     val back = SnapshotTable.read(spark, dir)
     assert(back.count() == 8000)
+    // the schema a Parquet scan of the files infers, nullability included
+    assert(back.schema == spark.read.parquet(dir + "/data/bb0").schema)
+    // two opens of one snapshot are the same relation (cache lookup, exchange reuse)
+    assert(back.sameSemantics(SnapshotTable.read(spark, dir)))
     val lin = SnapshotTable.lineage(spark, dir)
     assert(lin.agg(sum("rows")).head().getLong(0) == 8000)
     assert(lin.select("batch_id").distinct().count() == 2)
@@ -127,6 +166,19 @@ class SnapshotTableSpec extends AnyFunSuite {
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == want && want.nonEmpty)
     assert(selected < total, s"no files skipped ($selected of $total)")
+    // a plain filter on read scans exactly the files readRange selected,
+    // with the literal on either side of the comparison
+    Seq(col("bucket").between(lo, hi), lit(hi) >= col("bucket") && lit(lo) <= col("bucket")).foreach { p =>
+      val ids = SnapshotTable.read(spark, dir).filter(p).select("id")
+      assert(ids.collect().map(_.getLong(0)).sorted.toSeq == want)
+      assert(filesRead(ids) == selected)
+    }
+    // a bucket set of 12 (planned as InSet) prunes too
+    val probe = cells.slice(cells.length / 4, cells.length / 4 + 12).toSeq
+    val (byBuckets, selected2, _) = SnapshotTable.readBuckets(spark, dir, probe)
+    assert(byBuckets.select("id").as[Long].collect().sorted.toSeq ==
+      df.filter(col("bucket").isin(probe: _*)).select("id").as[Long].collect().sorted.toSeq)
+    assert(selected2 < total, s"readBuckets skipped no files ($selected2 of $total)")
     // byte-stability across parallelism holds for the z-order layout too
     val dir2 = freshDir()
     SnapshotTable.commitBatch(df.repartition(3), dir2, "b0", "bucket", Seq("id"),
@@ -175,6 +227,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.commitBatch(batchDf(0, 6000, 8), dir, "big", "bucket", Seq("id")))
     assert(SnapshotTable.commitBatch(batchDf(1, 300, 2), dir, "s1", "bucket", Seq("id")))
     assert(SnapshotTable.commitBatch(batchDf(2, 400, 2), dir, "s2", "bucket", Seq("id")))
+    // opening the table, now or at a version, runs no job
+    assert(jobsStartedBy { SnapshotTable.read(spark, dir); SnapshotTable.readAt(spark, dir, 2) } == 0)
     // time travel across the commit history
     assert(SnapshotTable.readAt(spark, dir, 1).count() == 6000)
     assert(SnapshotTable.readAt(spark, dir, 2).count() == 6300)
@@ -242,12 +296,23 @@ class SnapshotTableSpec extends AnyFunSuite {
     val snapDir = java.nio.file.Paths.get(dir, "snapshots")
     val v = SnapshotTable.currentVersion(dir)
     val path = snapDir.resolve(s"v$v.json")
+    val manifest = Files.readString(path)
     Files.writeString(path,
-      Files.readString(path).replaceAll("\"(minBucket|maxBucket)\":\\s*\"(\\d+)\"", "\"$1\":$2"))
+      manifest.replaceAll("\"(minBucket|maxBucket)\":\\s*\"(\\d+)\"", "\"$1\":$2"))
     val c = stats.head.minBucket
     val (frame, selected, total) = SnapshotTable.readRange(spark, dir, c, c)
     assert(selected == total)
     assert(frame.filter(col("bucket") === c).count() == counts(c))
+    // a manifest without bucketCol: exact bounds, but every file is read
+    val noCol = manifest.replaceAll(",\\s*\"bucketCol\":\\s*\"bucket\"", "")
+    assert(noCol != manifest)
+    Files.writeString(path, noCol)
+    val (frame2, selected2, total2) = SnapshotTable.readRange(spark, dir, c, c)
+    assert(selected2 == total2 && total2 == total)
+    assert(frame2.filter(col("bucket") === c).count() == counts(c))
+    val filtered = SnapshotTable.read(spark, dir).filter(col("bucket") === c)
+    assert(filtered.collect().length == counts(c))
+    assert(filesRead(filtered) == total)
   }
 
   test("optimistic concurrency: racing committers all land, none clobbered") {
