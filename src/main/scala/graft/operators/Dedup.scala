@@ -34,13 +34,14 @@ import org.apache.spark.sql.expressions.Window
   * `bandedPairs` shared by MinHash ([[minhashCandidates]]), the
   * pigeonhole-Hamming engine ([[hammingPairs64]]) and the embedding
   * near-dup: it persists the signatures, counts the (band, hash)
-  * histogram, applies the cap, picks the chunked branch and reports the
-  * drop count. The families add only their signature, band layout and
-  * verification. `bucketStats`' precondition — counts taken over a
-  * persisted, deterministic signature frame, since its driver-side numbers
-  * gate which pairs survive — is met there, by the core owning the
-  * persist. ([[decontaminateLarge]] keeps its own cross-side banding: its
-  * over-cap buckets fail safe instead of being dropped.)
+  * histogram, applies the cap, picks the chunked branch, returns each
+  * candidate pair once (the cross-band dedup) and reports the drop count.
+  * The families add only their signature, band values and verification.
+  * `bucketStats`' precondition — counts taken over a persisted,
+  * deterministic signature frame, since its driver-side numbers gate which
+  * pairs survive — is met there, by the core owning the persist.
+  * ([[decontaminateLarge]] keeps its own cross-side banding: its over-cap
+  * buckets fail safe instead of being dropped.)
   */
 object Dedup {
 
@@ -143,23 +144,38 @@ object Dedup {
 
   /** THE banded-candidate core of the LSH family ([[minhashCandidates]],
     * [[hammingPairs64]], [[embeddingNearDup]]): persist the signature frame
-    * `sigs`, explode `bandArray` (one value per band, over `sigs`' columns)
-    * into (band, bh) buckets, count the histogram, cap it at `maxBucket`
-    * and pair each in-cap bucket's `payload` structs (id first) through
-    * the bounded chunk generator. Returns the bucket pairs (band, a, b)
-    * with a.id < b.id — a pair agreeing on several bands appears once per
-    * band — the number of dropped buckets, and the persisted frame for the
-    * caller's verify joins. Payloads stay skinny (ids and 64-bit
-    * signatures): wide values such as the MinHash signature or an
-    * embedding join back onto the pair set instead of riding every
-    * bucket's shuffle. */
-  private def bandedPairs(
-      sigs: DataFrame, bandArray: Column, payload: Seq[String],
+    * `sigs` (columns `id` and `key`, plus anything the caller joins back),
+    * explode `bandsOf(key)` (one value per band) into (band, bh) buckets,
+    * count the histogram, cap it at `maxBucket`, pair each in-cap bucket's
+    * (id, key) structs through the bounded chunk generator and dedup across
+    * bands. Returns the candidate pairs (id_a, id_b, n_bands_matched, a, b)
+    * — a and b the two (id, key) structs, id_a < id_b, EACH PAIR ONCE — the
+    * number of dropped buckets, and the persisted frame for the caller's
+    * verify joins.
+    *
+    * Cross-band dedup: when NO bucket was dropped (known driver-side; the
+    * overwhelmingly common shape), every agreeing band's bucket is present,
+    * so a pair is kept ONLY in its FIRST agreeing band — a per-row
+    * predicate on a.key and b.key (the StreamingDedup rule), no shuffle.
+    * With drops, a pair's first agreeing band may be the dropped one while
+    * a later band survived, so the pairs are deduplicated on (id_a, id_b)
+    * instead. `n_bands_matched` is the number of bands on which a.key and
+    * b.key agree, computed per row: without drops it equals the number of
+    * buckets the pair shares; with drops it also counts agreeing bands
+    * whose bucket was dropped. Both predicates are unrolled column
+    * expressions (codegen'd), not higher-order lambdas.
+    *
+    * Payloads stay skinny (the id and the banding key: a 64-bit signature,
+    * or MinHash's 8 band hashes): wide values such as the full MinHash
+    * signature or an embedding join back onto the pair set instead of
+    * riding every bucket's shuffle. */
+  private[operators] def bandedPairs(
+      sigs: DataFrame, key: String, bandsOf: Column => Seq[Column],
       maxBucket: Int, chunkSize: Int): (DataFrame, Long, DataFrame) = {
     val persisted = CacheTracker.register(
       sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val banded = persisted.select(
-      payload.map(col) :+ posexplode(bandArray).as(Seq("band", "bh")): _*)
+    val banded = persisted.select(col("id"), col(key),
+      posexplode(array(bandsOf(col(key)): _*)).as(Seq("band", "bh")))
     // count first: the (band, bh) histogram decides which buckets survive
     // the cap; both aggregations shuffle on the same key, so AQE reuses the
     // exchange and the oversized buckets never reach collect_list
@@ -167,38 +183,31 @@ object Dedup {
     val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
     val kept = banded
       .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
-      .select(col("band"), col("bh"), col("__bn"), struct(payload.map(col): _*).as("x"))
-    (chunkedBucketPairs(kept, chunkSize, smallOnly = maxInCap <= chunkSize), nDropped, persisted)
+      .select(col("band"), col("bh"), col("__bn"), struct(col("id"), col(key)).as("x"))
+    val agree = bandsOf(col(s"a.$key")).zip(bandsOf(col(s"b.$key"))).map { case (x, y) => x === y }
+    val pairs = chunkedBucketPairs(kept, chunkSize, smallOnly = maxInCap <= chunkSize)
+      .select(col("band"), col("a.id").as("id_a"), col("b.id").as("id_b"),
+        agree.map(when(_, 1L).otherwise(0L)).reduce(_ + _).as("n_bands_matched"),
+        col("a"), col("b"))
+    val once =
+      if (nDropped == 0) {
+        val firstAgree = agree.zipWithIndex.foldRight(lit(-1): Column) { case ((eq, i), els) =>
+          when(eq, lit(i)).otherwise(els)
+        }
+        pairs.filter(col("band") === firstAgree)
+      } else pairs.dropDuplicates("id_a", "id_b")
+    (once.drop("band"), nDropped, persisted)
   }
 
   /** Bits [off, off + width) of a 64-bit signature, for each (off, width)
-    * of `layout` — the band values of the pigeonhole blocks, the embedding
-    * bands and [[graft.streaming.StreamingDedup]]. */
+    * of `layout` — the band values of [[graft.streaming.StreamingDedup]];
+    * the batch families hand [[bitBand]] to [[bandedPairs]]. */
   private[graft] def bitBands(sig: Column, layout: Seq[(Int, Int)]): Column =
     array(layout.map(bitBand(sig, _)): _*)
 
-  private def bitBand(sig: Column, band: (Int, Int)): Column = {
+  private[operators] def bitBand(sig: Column, band: (Int, Int)): Column = {
     val (off, w) = band
     shiftrightunsigned(sig, off).bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1L))
-  }
-
-  /** Cross-band dedup of [[bandedPairs]] output over bit bands: (id_a, id_b,
-    * `extra`...) once per pair. When NO bucket was dropped (known
-    * driver-side; the overwhelmingly common shape), every agreeing band's
-    * bucket is present, so each pair is kept ONLY in its FIRST agreeing
-    * band — a per-row predicate on the two signatures (the StreamingDedup
-    * rule) instead of a shuffle of all candidate pairs. With drops, a
-    * pair's first agreeing band may be the dropped one while a later band
-    * survived, so the pairs are grouped instead. */
-  private def oncePerPair(
-      pairs: DataFrame, layout: Seq[(Int, Int)], nDropped: Long, extra: Column*): DataFrame = {
-    val out = Seq(col("a.id").as("id_a"), col("b.id").as("id_b")) ++ extra
-    if (nDropped == 0) {
-      val firstAgree = layout.zipWithIndex.foldRight(lit(-1): Column) { case ((band, i), els) =>
-        when(bitBand(col("a.sig"), band) === bitBand(col("b.sig"), band), lit(i)).otherwise(els)
-      }
-      pairs.filter(col("band") === firstAgree).select(out: _*)
-    } else pairs.select(out: _*).dropDuplicates("id_a", "id_b")
   }
 
   /** Exact dedup on a content column: keeps the first row (min of `keep`)
@@ -266,23 +275,21 @@ object Dedup {
       maxBucket: Int = 4096, chunkSize: Int = DefaultChunkSize): DataFrame = {
     val perms = bands * rowsPerBand
     // the persisted signature frame feeds the banding plus the two estimate
-    // joins, so the per-doc MinHash kernel runs once. (A/B rejected the
-    // carry-sig-in-the-bucket-struct alternative: the 32-long payload rides
-    // the (band,bh) shuffle bands× per doc — ~3× the shuffled bytes of the
-    // skinny banding + two sig joins, and measurably slower at sf0.1.)
-    val (bucketPairs, nDropped, sig) = bandedPairs(
-      df.select(id.as("id"), minhash(text, shingleLen, perms).as("sig")),
-      bandHashArray(col("sig"), bands, rowsPerBand), Seq("id"), maxBucket, chunkSize)
-    val pairs = bucketPairs
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_bands_matched"))
-      // pass 1: require >= minBands matching bands (cuts the false-positive
-      // tail an order of magnitude on overlapping corpora)
-      .filter(col("n_bands_matched") >= minBands)
+    // joins, so the per-doc MinHash kernel runs once. Its 8 band hashes
+    // (64 B) ride the bucket struct, so the cross-band dedup and
+    // n_bands_matched are per-row predicates, not a shuffle of every bucket
+    // pair. (A/B rejected carrying the whole 32-long signature there: it
+    // rides the (band, bh) shuffle bands× per doc — ~3× the shuffled bytes
+    // of the skinny banding + two sig joins, and measurably slower at sf0.1.)
+    val (pairs, nDropped, sig) = bandedPairs(
+      df.select(id.as("id"), minhash(text, shingleLen, perms).as("sig"))
+        .withColumn("bhs", bandHashArray(col("sig"), bands, rowsPerBand)),
+      "bhs", bhs => (0 until bands).map(bhs.getItem(_)), maxBucket, chunkSize)
+    // pass 1: require >= minBands matching bands (cuts the false-positive
+    // tail an order of magnitude on overlapping corpora)
     // pass 2: cheap jaccard estimate from full signatures (32 comparisons)
     // before the expensive exact shingle-set verification
-    pairs
+    pairs.filter(col("n_bands_matched") >= minBands)
       .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("sig_frac",
@@ -808,9 +815,9 @@ object Dedup {
       maxHamming: Int = 3, maxBucket: Int = 65536,
       chunkSize: Int = DefaultChunkSize): DataFrame = {
     val layout = pigeonholeLayout(maxHamming)
-    val (bucketPairs, nDropped, _) = bandedPairs(df.select(id.as("id"), sig64.as("sig")),
-      bitBands(col("sig"), layout), Seq("id", "sig"), maxBucket, chunkSize)
-    oncePerPair(bucketPairs, layout, nDropped,
+    val (pairs, nDropped, _) = bandedPairs(df.select(id.as("id"), sig64.as("sig")),
+      "sig", sig => layout.toSeq.map(bitBand(sig, _)), maxBucket, chunkSize)
+    pairs.select(col("id_a"), col("id_b"),
         hamming(col("a.sig"), col("b.sig")).cast("long").as("__h"))
       .filter(col("__h") <= maxHamming)
       // when() keeps the column nullable like the drop path's first()
@@ -873,12 +880,11 @@ object Dedup {
     val layout = Array.tabulate(bands)(b => (b * width, width))
     // the embeddings stay in the persisted frame, out of the bucket struct
     // (they would multiply the chunk payload by the vector width) and are
-    // joined back onto the deduplicated pair set; the 64-bit sig rides
-    // along because the first-agreeing-band dedup reads it
-    val (bucketPairs, nDropped, sigs) = bandedPairs(
+    // joined back onto the deduplicated pair set
+    val (pairs, nDropped, sigs) = bandedPairs(
       df.select(id.as("id"), emb.as("emb"), Ann.hyperplaneSig(emb, planes).as("sig")),
-      bitBands(col("sig"), layout), Seq("id", "sig"), maxBucket, chunkSize)
-    val cand = oncePerPair(bucketPairs, layout, nDropped)
+      "sig", sig => layout.toSeq.map(bitBand(sig, _)), maxBucket, chunkSize)
+    val cand = pairs
       .join(sigs.select(col("id").as("id_a"), col("emb").as("emb_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("emb").as("emb_b")), "id_b")
     verify(cand.withColumn(scoreName, score(col("emb_a"), col("emb_b"))))

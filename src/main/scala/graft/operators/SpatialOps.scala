@@ -487,14 +487,14 @@ object SpatialOps {
       algorithm: String = "auto"): DataFrame = {
     val pairs = radiusPairs(df, id, lon, lat, radiusDeg, res, scale)
     // autoLabelPasses = 10: with pointer jumping each pass doubles known
-    // distance, so 10 passes cover diameter ≈ 2^10 — geometric proximity
-    // graphs (dense blobs AND the near-percolation chains that predated
-    // the r5 pointer-jump rework) converge inside the label attempt. The
-    // old bound of 4 made `auto` pay 4 wasted label passes PLUS the full
-    // star contraction on the q46 corpus (probe: auto(4) 5.9 s vs
-    // label-converged 3.0 s warm at sf0.1); the star fallback remains the
-    // safety net for truly adversarial graphs. Labels are algorithm-
-    // invariant (comp = component min id), so results are unchanged.
+    // distance, so 10 passes cover diameter ≈ 2^10. q46's near-percolation
+    // chains converge on label pass 8 at sf0.01 and sf0.1, so the star
+    // fallback does not run there; the old bound of 4 made `auto` pay 4
+    // wasted label passes PLUS the full star contraction (probe: auto(4)
+    // 5.9 s vs label-converged 3.0 s warm at sf0.1). The star fallback
+    // remains the safety net for truly adversarial graphs. Labels are
+    // algorithm-invariant (comp = component min id), so results are
+    // unchanged.
     val comps = graft.operators.Dedup.connectedComponents(
       pairs, col("id_a"), col("id_b"), algorithm = algorithm,
       autoLabelPasses = 10)

@@ -506,6 +506,27 @@ class DedupAnnSpec extends AnyFunSuite {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh == brute, s"missing=${brute -- lsh} extra=${lsh -- brute}")
     assert(brute.nonEmpty)
+    // the candidates themselves == a reference that reads only the public
+    // signature: a pair is a candidate iff >= 2 of its 8 four-row bands are
+    // equal and >= 35% of its 32 rows are; n_bands_matched is the number of
+    // equal bands, and no pair comes out twice
+    val sigs = d.select(col("doc_id"), Dedup.minhash(col("text"), 4, 32).as("sig"))
+      .as[(Long, Array[Long])].collect()
+    val ref = (for {
+      (a, sa) <- sigs
+      (b, sb) <- sigs if a < b
+      nb = (0 until 8).count(k => (0 until 4).forall(r => sa(4 * k + r) == sb(4 * k + r)))
+      frac = sa.indices.count(i => sa(i) == sb(i)).toDouble / 32
+      if nb >= 2 && frac >= 0.35
+    } yield (a, b, nb.toLong, frac)).toSet
+    val got = Dedup.minhashCandidates(d, col("doc_id"), col("text"))
+      .as[(Long, Long, Long, Double, Long)].collect()
+    CacheTracker.releaseAll()
+    assert(got.forall(_._5 == 0L), "no bucket may be dropped at sf0.001")
+    assert(got.map(r => (r._1, r._2)).distinct.length == got.length, "a pair appears twice")
+    val gotSet = got.map(r => (r._1, r._2, r._3, r._4)).toSet
+    assert(gotSet == ref, s"missing=${ref -- gotSet} extra=${gotSet -- ref}")
+    assert(ref.size >= 10, s"expected some candidates, reference has ${ref.size}")
   }
 
   test("minhash hot-bucket cap: degenerate corpus drops buckets, reports count, no blowup") {
@@ -676,6 +697,59 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(byChunk(1) == byChunk(0),
       s"missing=${byChunk(0) -- byChunk(1)} extra=${byChunk(1) -- byChunk(0)}")
     assert(byChunk(0).count(p => p._1 >= 10000L && p._2 >= 10000L) == 40 * 39 / 2)
+  }
+
+  test("minhash candidates: each pair once with and without drops; no pair aggregate without drops") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    def pairAggregates(df: DataFrame): Int = df.queryExecution.optimizedPlan.collect {
+      case a: Aggregate
+          if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet == Set("id_a", "id_b") => a
+    }.size
+    val d = docs(150).cache()
+    val healthy = Dedup.minhashCandidates(d, col("doc_id"), col("text"))
+    val hr = healthy.select("id_a", "id_b", "n_dropped_buckets").as[(Long, Long, Long)].collect()
+    assert(hr.nonEmpty && hr.forall(_._3 == 0L))
+    assert(hr.map(r => (r._1, r._2)).distinct.length == hr.length, "a pair appears twice")
+    assert(pairAggregates(healthy) == 0, healthy.queryExecution.optimizedPlan.toString)
+    // 300 identical docs fill one bucket per band; at maxBucket = 100 all 8
+    // are dropped, so the core takes the (id_a, id_b) dedup instead
+    val same = spark.range(300).select((col("id") + 10000L).as("doc_id"),
+      lit("the very same paragraph of boilerplate in three hundred documents").as("text"))
+    val dropped = Dedup.minhashCandidates(d.unionByName(same), col("doc_id"), col("text"),
+      maxBucket = 100)
+    val dr = dropped.select("id_a", "id_b", "n_dropped_buckets").as[(Long, Long, Long)].collect()
+    CacheTracker.releaseAll()
+    assert(dr.nonEmpty && dr.forall(_._3 == 8L), dr.take(3).toSeq)
+    assert(dr.map(r => (r._1, r._2)).distinct.length == dr.length, "a pair appears twice")
+    assert(dr.map(r => (r._1, r._2)).toSet == hr.map(r => (r._1, r._2)).toSet)
+    assert(pairAggregates(dropped) == 1)
+    d.unpersist()
+  }
+
+  test("bandedPairs: n_bands_matched counts every agreeing band, dropped buckets included") {
+    // 4 bands of 16 bits. Pair (1, 2) has equal signatures, so it agrees on
+    // all 4 bands. 150 flood signatures share the pair's band-0 value and
+    // nothing else, so at maxBucket = 100 band 0's 152-member bucket is
+    // dropped: the pair still comes out once, via band 1, and its
+    // n_bands_matched still counts the dropped band 0.
+    val layout = Seq((0, 16), (16, 16), (32, 16), (48, 16))
+    val pairSig = 0x123456789abcdef0L
+    val flood = (1L to 150L).map(i => (100L + i, (pairSig & 0xFFFFL) | (i << 16) | (i << 32) | (i << 48)))
+    val sigs = ((1L, pairSig) +: (2L, pairSig) +: flood).toDF("id", "sig")
+    for (maxBucket <- Seq(100, 65536)) {
+      val (pairs, nDropped, _) = Dedup.bandedPairs(sigs, "sig",
+        s => layout.map(Dedup.bitBand(s, _)), maxBucket, Dedup.DefaultChunkSize)
+      val out = pairs.select("id_a", "id_b", "n_bands_matched").as[(Long, Long, Long)].collect()
+      CacheTracker.releaseAll()
+      assert(out.map(p => (p._1, p._2)).distinct.length == out.length, s"maxBucket=$maxBucket")
+      assert(out.filter(p => p._1 == 1L && p._2 == 2L).toSeq == Seq((1L, 2L, 4L)), s"maxBucket=$maxBucket")
+      if (maxBucket == 100) {
+        assert(nDropped == 1L && out.length == 1, s"${out.toSeq}")
+      } else {
+        assert(nDropped == 0L && out.length == 152 * 151 / 2)
+        assert(out.forall(p => p._1 == 1L || p._3 == 1L), "flood pairs agree on band 0 only")
+      }
+    }
   }
 
   test("ivf ANN recall vs brute force >= 0.4 at probes=2") {
