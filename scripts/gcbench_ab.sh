@@ -16,7 +16,8 @@
 # each run is one JVM that times the selected queries SPARK_GRAFT_REPEATS
 # times (default 3) on SPARK_GRAFT_SF_DIR (default sf0.1) with
 # SPARK_GRAFT_CPUS cores (default 4), and the summary compares each
-# query's min-of-N seconds; --workload, --seed and --trace do not apply.
+# query's min-of-N seconds (its "min"; the "record" of the untimed recorded
+# run is not read); --workload, --seed and --trace do not apply.
 #
 # Every side runs from its own export, in sibling directories of one
 # temporary directory (removed on exit), so no side runs from a different
@@ -46,7 +47,7 @@ while [ $# -gt 0 ]; do
     --out) out=$2; shift 2 ;;
     --aa) aa=1; shift ;;
     --benchx) benchx=$2; shift 2 ;;
-    -h|--help) sed -n '2,34p' "$0"; exit 0 ;;
+    -h|--help) sed -n '2,35p' "$0"; exit 0 ;;
     *) echo "unknown argument: $1" >&2; exit 2 ;;
   esac
 done

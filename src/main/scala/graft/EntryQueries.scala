@@ -996,9 +996,9 @@ object EntryQueries {
   /** Spatial connectivity clustering ([[SpatialOps.clusterPoints]]) over
     * one hotspot city's points (id % 10 < 3 picks the hotspot rows, id % 3
     * = 0 the first city): cluster = transitive closure of "within 0.002°",
-    * singletons kept. Exercises radiusPairs → connectedComponents(auto):
-    * label propagation converges on its 8th of 10 passes at sf0.01 and
-    * sf0.1, so the star-contraction fallback does not run here. Oracle = brute
+    * singletons kept. Exercises radiusPairs → connectedComponents: label
+    * propagation converges on its 8th of 10 passes at sf0.01 and sf0.1, so
+    * the star-contraction fallback does not run here. Oracle = brute
     * quantized pair scan + recursive-CTE closure + singleton union. The
     * subset keeps the DuckDB closure at q39 scale (the full 20k-point
     * closure measured 226 s — too slow for a per-round gate). */

@@ -80,6 +80,19 @@ final case class GCollection(geoms: Vector[Geom]) extends Geom
 
 object GPoint { def apply(x: Double, y: Double): GPoint = GPoint(Pt(x, y)) }
 
+object Geom {
+  /** Deepest nesting the WKB and WKT decoders accept: a geometry is depth
+    * 1, and each geometry around it (a collection; in WKB also a multi
+    * geometry around its members) adds 1. Deeper input throws
+    * IllegalArgumentException, as JSON beyond `Json.MaxDepth` does, so a
+    * decoder gives a value or null instead of overflowing the stack. */
+  val MaxDepth = 1000
+
+  private[core] def checkDepth(depth: Int): Unit =
+    if (depth > MaxDepth)
+      throw new IllegalArgumentException(s"geometry nested deeper than $MaxDepth")
+}
+
 /** GeoJSON Feature row, matching the reference's canonical document model
   * (`/root/reference/src/GeoConvert.js:3-9`): open `properties` map, an
   * optional `style` map populated only by the KML/DXF paths, optional bbox.

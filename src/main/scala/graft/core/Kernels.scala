@@ -261,7 +261,7 @@ object Kernels {
     * packed in a Long so the walk stays allocation-free.
     */
   def containsWkb(wkb: Array[Byte], px: Double, py: Double): Boolean =
-    (containsAt(wkb, 0, px, py) & 1L) == 1L
+    (containsAt(wkb, 0, px, py, 1) & 1L) == 1L
 
   @inline private def rdInt(b: Array[Byte], off: Int, le: Boolean): Int = ByteView.getInt(b, off, le)
 
@@ -282,8 +282,10 @@ object Kernels {
     if ((rawType & 0x20000000) != 0) off + 9 else off + 5
   }
 
-  /** One geometry at `off`; returns (nextOffset << 1) | inside. */
-  private def containsAt(b: Array[Byte], off: Int, px: Double, py: Double): Long = {
+  /** One geometry at `off` and `depth` ([[Geom.MaxDepth]] bounds it);
+    * returns (nextOffset << 1) | inside. */
+  private def containsAt(b: Array[Byte], off: Int, px: Double, py: Double, depth: Int): Long = {
+    Geom.checkDepth(depth)
     val le = b(off) != 0
     val rawType = rdInt(b, off + 1, le)
     var p = bodyAt(off, rawType)
@@ -295,7 +297,7 @@ object Kernels {
         var found = false
         var i = 0
         while (i < n) {
-          val r = containsAt(b, p, px, py)
+          val r = containsAt(b, p, px, py, depth + 1)
           p = (r >>> 1).toInt
           if ((r & 1L) == 1L) found = true
           i += 1
@@ -305,7 +307,7 @@ object Kernels {
         val x = rdDouble(b, p, le); val y = rdDouble(b, p + 8, le)
         ((p + 16).toLong << 1) | (if (x == px && y == py) 1L else 0L)
       case t =>
-        (skipBody(b, p, le, t).toLong << 1)
+        (skipBody(b, p, le, t, depth).toLong << 1)
     }
   }
 
@@ -344,8 +346,9 @@ object Kernels {
     (p.toLong << 1) | (if (inside) 1L else 0L)
   }
 
-  /** Skip one geometry BODY (after order+type) of kind `t`; returns offset. */
-  private def skipBody(b: Array[Byte], off: Int, le: Boolean, t: Int): Int = t match {
+  /** Skip one geometry BODY (after order+type) of kind `t` at `depth`;
+    * returns offset. */
+  private def skipBody(b: Array[Byte], off: Int, le: Boolean, t: Int, depth: Int): Int = t match {
     case 1 => off + 16
     case 2 =>
       val n = rdInt(b, off, le); off + 4 + n * 16
@@ -362,7 +365,8 @@ object Kernels {
       while (i < n) {
         val le2 = b(p) != 0
         val raw = rdInt(b, p + 1, le2)
-        p = skipBody(b, bodyAt(p, raw), le2, raw & 0xFF)
+        Geom.checkDepth(depth + 1)
+        p = skipBody(b, bodyAt(p, raw), le2, raw & 0xFF, depth + 1)
         i += 1
       }
       p

@@ -69,15 +69,15 @@ object Wkb {
   // ---------- reader ----------
 
   def read(bytes: Array[Byte]): Geom = {
-    val buf = ByteBuffer.wrap(bytes)
-    val g = get(buf)
-    g
+    get(ByteBuffer.wrap(bytes), 1)
   }
 
   def readOpt(bytes: Array[Byte]): Option[Geom] =
     try Some(read(bytes)) catch { case _: Exception => None }
 
-  private def get(buf: ByteBuffer): Geom = {
+  /** One geometry at `depth` ([[Geom.MaxDepth]] bounds it). */
+  private def get(buf: ByteBuffer, depth: Int): Geom = {
+    Geom.checkDepth(depth)
     val order = buf.get()
     buf.order(if (order == 0) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
     // EWKB/ISO compat: strip EWKB flag bits, then fold ISO Z/M type offsets
@@ -102,25 +102,25 @@ object Wkb {
         GPolygon(Vector.fill(n)(getLine(buf)))
       case 4 =>
         val n = buf.getInt
-        GMultiPoint(Vector.fill(n) { get(buf) match {
+        GMultiPoint(Vector.fill(n) { get(buf, depth + 1) match {
           case GPoint(p) => p
           case other => throw new IllegalArgumentException(s"wkb: expected point in multipoint, got ${other.kind}")
         }})
       case 5 =>
         val n = buf.getInt
-        GMultiLineString(Vector.fill(n) { get(buf) match {
+        GMultiLineString(Vector.fill(n) { get(buf, depth + 1) match {
           case GLineString(ps) => ps
           case other => throw new IllegalArgumentException(s"wkb: expected linestring, got ${other.kind}")
         }})
       case 6 =>
         val n = buf.getInt
-        GMultiPolygon(Vector.fill(n) { get(buf) match {
+        GMultiPolygon(Vector.fill(n) { get(buf, depth + 1) match {
           case GPolygon(rs) => rs
           case other => throw new IllegalArgumentException(s"wkb: expected polygon, got ${other.kind}")
         }})
       case 7 =>
         val n = buf.getInt
-        GCollection(Vector.fill(n)(get(buf)))
+        GCollection(Vector.fill(n)(get(buf, depth + 1)))
       case other => throw new IllegalArgumentException(s"wkb: unknown type $other")
     }
   }

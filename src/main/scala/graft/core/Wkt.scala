@@ -37,7 +37,7 @@ object Wkt {
 
   def parse(s: String): Geom = {
     val p = new P(s)
-    val g = p.geometry()
+    val g = p.geometry(1)
     p.skipWs()
     if (!p.eof) throw new IllegalArgumentException(s"wkt: trailing content at ${p.pos}")
     g
@@ -133,7 +133,9 @@ object Wkt {
       b.result()
     }
 
-    def geometry(): Geom = {
+    /** One geometry at `depth` ([[Geom.MaxDepth]] bounds it). */
+    def geometry(depth: Int): Geom = {
+      Geom.checkDepth(depth)
       val tag = word()
       maybeDimTag()
       tag match {
@@ -163,8 +165,8 @@ object Wkt {
           else {
             expect('(')
             val b = Vector.newBuilder[Geom]
-            b += geometry()
-            while (tryConsume(',')) b += geometry()
+            b += geometry(depth + 1)
+            while (tryConsume(',')) b += geometry(depth + 1)
             expect(')')
             GCollection(b.result())
           }

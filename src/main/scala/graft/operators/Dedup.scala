@@ -151,7 +151,8 @@ object Dedup {
     * bands. Returns the candidate pairs (id_a, id_b, n_bands_matched, a, b)
     * — a and b the two (id, key) structs, id_a < id_b, EACH PAIR ONCE — the
     * number of dropped buckets, and the persisted frame for the caller's
-    * verify joins.
+    * verify joins. The drop count, largest in-cap bucket, chunked branch
+    * and dedup mode are reported as an `obs` decision.
     *
     * Cross-band dedup: when NO bucket was dropped (known driver-side; the
     * overwhelmingly common shape), every agreeing band's bucket is present,
@@ -185,7 +186,8 @@ object Dedup {
       .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
       .select(col("band"), col("bh"), col("__bn"), struct(col("id"), col(key)).as("x"))
     val agree = bandsOf(col(s"a.$key")).zip(bandsOf(col(s"b.$key"))).map { case (x, y) => x === y }
-    val pairs = chunkedBucketPairs(kept, chunkSize, smallOnly = maxInCap <= chunkSize)
+    val smallOnly = maxInCap <= chunkSize
+    val pairs = chunkedBucketPairs(kept, chunkSize, smallOnly)
       .select(col("band"), col("a.id").as("id_a"), col("b.id").as("id_b"),
         agree.map(when(_, 1L).otherwise(0L)).reduce(_ + _).as("n_bands_matched"),
         col("a"), col("b"))
@@ -196,6 +198,8 @@ object Dedup {
         }
         pairs.filter(col("band") === firstAgree)
       } else pairs.dropDuplicates("id_a", "id_b")
+    graft.obs.decision("bandedPairs", "nDropped" -> nDropped, "maxInCap" -> maxInCap,
+      "smallOnly" -> smallOnly, "dedup" -> (if (nDropped == 0) "first-band" else "dropDuplicates"))
     (once.drop("band"), nDropped, persisted)
   }
 
@@ -513,51 +517,38 @@ object Dedup {
     * shuffles per pass. Min is associative and labels only decrease, so
     * the result is partition-invariant and deterministic. Convergence is
     * detected by the strictly-decreasing label sum (exact DECIMAL(38) —
-    * overflow-safe at any id scale, one tiny aggregate action per pass);
-    * `maxIters` bounds the loop and THROWS on non-convergence — a silent
-    * partial closure would under-delete.
+    * overflow-safe at any id scale, one tiny aggregate action per pass).
     *
-    * `algorithm`: "label" (default) is the pointer-jumping min-label loop.
-    * "star" is alternating large-star/small-star contraction
-    * ([[connectedComponentsStar]]) — O(log²) rounds with per-round edge
-    * REWRITING (contraction shrinks the edge set; label propagation keeps
-    * it static), the fallback for graphs whose label state itself is the
-    * bottleneck. "auto" tries label propagation for `autoLabelPasses`
-    * passes (covers diameter ≈ 2^autoLabelPasses under pointer jumping)
-    * and falls back to star contraction, so a pipeline never dies on an
-    * unexpectedly stringy graph. */
-  def connectedComponents(
-      pairs: DataFrame, a: Column, b: Column, maxIters: Int = 30,
-      algorithm: String = "label", autoLabelPasses: Int = 8): DataFrame =
-    algorithm match {
-      case "label" =>
-        val (labels, converged, iters) = labelPropagation(pairs, a, b, maxIters)
-        require(converged, s"connectedComponents: not converged after $iters passes " +
-          "(graph diameter exceeds the bound — use algorithm = \"star\" or \"auto\")")
-        CacheTracker.register(labels)
-        labels
-      case "star" => connectedComponentsStar(pairs, a, b, maxIters)
-      case "auto" =>
-        val (labels, converged, _) =
-          labelPropagation(pairs, a, b, math.min(maxIters, autoLabelPasses))
-        if (converged) { CacheTracker.register(labels); labels }
-        else {
-          labels.unpersist()
-          connectedComponentsStar(pairs, a, b, maxIters)
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"connectedComponents: unknown algorithm '$other' (label | star | auto)")
-    }
+    * After [[MaxLabelPasses]] passes without convergence (a diameter
+    * beyond ≈ 2^10, or a graph whose minima spread slowly) the labels are
+    * dropped and star contraction ([[connectedComponentsStar]]) computes
+    * the components instead — the same labels, so a pipeline never dies
+    * on an unexpectedly stringy graph and never returns a partial closure.
+    * Reports its label passes, per-pass ms and whether (and for how many
+    * rounds) the star fallback ran as an `obs` decision. */
+  def connectedComponents(pairs: DataFrame, a: Column, b: Column): DataFrame = {
+    val (labels, converged, passMs) = labelPropagation(pairs, a, b)
+    val (out, starRounds) =
+      if (converged) (CacheTracker.register(labels), 0)
+      else { labels.unpersist(); connectedComponentsStar(pairs, a, b) }
+    graft.obs.decision("connectedComponents", "labelPasses" -> passMs.length,
+      "passMs" -> passMs, "star" -> !converged, "starRounds" -> starRounds)
+    out
+  }
+
+  /** Label passes before [[connectedComponents]] falls back to star
+    * contraction. Measured on the gated queries: q39 converges in 1 pass,
+    * q46 in 8, q48/q64 in 2 at sf0.01 and 8 at sf0.1. */
+  private[operators] val MaxLabelPasses = 10
 
   /** The pointer-jumping min-label loop of [[connectedComponents]]: returns
-    * (labels, converged, passes). Each pass's labels are truncated with
-    * `localCheckpoint`, which keeps the blocks in executor storage only: it
+    * (labels, converged, ms of each pass). Each pass's labels are truncated
+    * with `localCheckpoint`, which keeps the blocks in executor storage only: it
     * does not survive the loss of an executor holding them (the truncated
     * plan has no lineage to recompute from), so such a loss fails the
     * query instead of recomputing the lost labels. */
   private def labelPropagation(
-      pairs: DataFrame, a: Column, b: Column, maxIters: Int): (DataFrame, Boolean, Int) = {
+      pairs: DataFrame, a: Column, b: Column): (DataFrame, Boolean, Vector[Long]) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // persist the edge projection BEFORE the symmetric union: both union
     // branches read it, and without the cache the (possibly expensive)
@@ -604,9 +595,11 @@ object Dedup {
     // non-increasing, so equal sums ⟺ no label changed. Only the empty
     // graph needs a separate check (its sum is vacuously stable).
     var prevSum = labelSum(labels)
+    val passMs = Vector.newBuilder[Long]
     var iter = 0
     var converged = nEdges == 0L
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < MaxLabelPasses) {
+      val t0 = System.nanoTime()
       val msgs = bidir.as("e").join(labels.as("l"), col("e.src") === col("l.id"))
         .select(col("e.dst").as("id"), col("l.comp"))
       val stepped = labels.unionByName(msgs)
@@ -614,8 +607,8 @@ object Dedup {
       // pointer jump (the Hash-to-Min shortcut): follow each label to ITS
       // label — known-distance doubles per pass, so convergence is
       // O(log diameter) passes, not O(diameter) (a chain-shaped dedup
-      // graph previously burned a pass per hop and pushed `auto` into the
-      // star fallback after paying all autoLabelPasses). comp values are
+      // graph previously burned a pass per hop and pushed it into the star
+      // fallback after paying all its label passes). comp values are
       // same-component node ids and only ever decrease, so the min-label
       // fixpoint — and the sum-based convergence test — are unchanged.
       // Every comp IS a node id present in `stepped`; the left join +
@@ -648,16 +641,17 @@ object Dedup {
       labels = next
       converged = s.compareTo(prevSum) == 0
       prevSum = s
+      passMs += (System.nanoTime() - t0) / 1000000L
       iter += 1
     }
-    (labels, converged, iter)
+    (labels, converged, passMs.result())
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR contraction
-    * — the O(log²)-round fallback for graphs whose diameter defeats label
-    * propagation (a 10⁶-node path converges in ~20 rounds here vs 10⁶
-    * passes there). Same contract as [[connectedComponents]]: (id, comp)
-    * for every id in the pairs, comp = component minimum.
+    * — [[connectedComponents]]' O(log²)-round fallback for graphs whose
+    * diameter defeats label propagation (a 10⁶-node path converges in ~20
+    * rounds here). Returns (id, comp) for every id in the pairs, comp =
+    * component minimum, and the number of rounds.
     *
     * Each round, over canonical edges (u, v) with u > v:
     *  - large-star: every node u attaches all STRICTLY LARGER neighbors to
@@ -670,9 +664,11 @@ object Dedup {
     * propagation). Convergence is the fixpoint of both stars, checked
     * EXACTLY: the edge set is a star forest iff no edge target is also a
     * source and every source has exactly one target — two cheap probe
-    * actions, no inexact checksum. THROWS on non-convergence. */
-  def connectedComponentsStar(
-      pairs: DataFrame, a: Column, b: Column, maxIters: Int = 50): DataFrame = {
+    * actions, no inexact checksum. THROWS after 50 rounds without
+    * convergence. */
+  private[operators] def connectedComponentsStar(
+      pairs: DataFrame, a: Column, b: Column): (DataFrame, Int) = {
+    val maxRounds = 50
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val raw = pairs.select(a.cast("long").as("u"), b.cast("long").as("v")).persist(lvl)
     CacheTracker.register(raw)
@@ -696,7 +692,7 @@ object Dedup {
       .distinct().localCheckpoint(false)
     var iter = 0
     var converged = isStarForest(edges)
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < maxRounds) {
       // large-star over the bidirected view: m ≤ u < v ⇒ (v, m) is already
       // canonical and never a self-loop
       val bidir = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
@@ -720,12 +716,11 @@ object Dedup {
       converged = isStarForest(edges)
       iter += 1
     }
-    require(converged, s"connectedComponentsStar: not converged after $maxIters rounds")
+    require(converged, s"connectedComponentsStar: not converged after $maxRounds rounds")
     val labels = nodes.join(edges.withColumnRenamed("u", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("v"), col("id")).as("comp"))
       .persist(lvl)
-    CacheTracker.register(labels)
-    labels
+    (CacheTracker.register(labels), iter)
   }
 
   /** Canonical-representative selection — the keep-set step completing the
@@ -740,15 +735,14 @@ object Dedup {
     *
     * `quality` must be integer-valued for cross-engine determinism (e.g.
     * [[TextOps.qualityScoreBp]]); float scores make the argmax order
-    * engine-dependent. Plan shape at scale: the closure's per-pass shuffle
-    * (passes = cluster diameter, `algorithm = "auto"` falls back to
-    * star-contraction for chain-shaped graphs) + one left join on the doc
+    * engine-dependent. Plan shape at scale: the closure's per-pass shuffles
+    * (pointer jumping needs O(log diameter) label passes, up to
+    * [[MaxLabelPasses]], then star contraction) + one left join on the doc
     * id + one window on the high-cardinality `comp` key — both window
     * aggregates (rank, size) share a single exchange. No driver collects. */
   def keepBest(docs: DataFrame, id: Column, quality: Column,
-               pairs: DataFrame, a: Column, b: Column,
-               algorithm: String = "auto"): DataFrame = {
-    val comps = connectedComponents(pairs, a, b, algorithm = algorithm)
+               pairs: DataFrame, a: Column, b: Column): DataFrame = {
+    val comps = connectedComponents(pairs, a, b)
       .withColumnRenamed("id", "__cid")
     val base = docs.select(id.cast("long").as("id"), quality.cast("long").as("quality"))
     val labeled = base.join(comps, base("id") === comps("__cid"), "left")

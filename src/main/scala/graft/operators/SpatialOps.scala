@@ -90,19 +90,22 @@ object SpatialOps {
     * degenerates to "every populated cell is hot" as data grows — the salt
     * set must stay a handful of genuinely skewed cells), and topN bounds
     * both the driver-side collect and the IN-set in the salted plan; a salt
-    * set is only useful for the few cells that dominate task time anyway. */
+    * set is only useful for the few cells that dominate task time anyway.
+    * Reports the salt-set size as an `obs` decision. */
   def hotCells(points: DataFrame, cell: Column,
       factor: Double = 8.0, topN: Int = 64): Array[Long] = {
     val counts = points.groupBy(cell.as("__cell")).count()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val hot = try {
       val avgRow = counts.agg(avg(col("count"))).head()
-      if (avgRow.isNullAt(0)) Array.empty
+      if (avgRow.isNullAt(0)) Array.emptyLongArray
       else counts.filter(col("count") > lit(avgRow.getDouble(0) * factor))
         .orderBy(col("count").desc, col("__cell"))
         .limit(topN)
         .select("__cell").collect().map(_.getLong(0)).sorted
     } finally { counts.unpersist(false); () }
+    graft.obs.decision("hotCells", "saltSet" -> hot.length)
+    hot
   }
 
   /** k nearest `points` for each row of `queries` by planar squared distance
@@ -125,7 +128,9 @@ object SpatialOps {
     * persisted per pass, collapsing to a collected IN-set filter once it
     * falls below `collectThreshold`. Each superseded accumulator/pending is
     * unpersisted as soon as its successor is materialized; the final ones
-    * are released by the caller via [[CacheTracker.releaseAll]].
+    * are released by the caller via [[CacheTracker.releaseAll]]. The last
+    * ring searched, the pending count after each pass and whether the
+    * brute-force fallback ran are reported as an `obs` decision.
     */
   def knnJoin(
       spark: SparkSession,
@@ -213,6 +218,7 @@ object SpatialOps {
     var prevRadius = 0
     var radius = 1
     var iter = 0
+    val pendingPerPass = Vector.newBuilder[Long]
     while (pendingCount > 0 && iter < 12 && radius <= maxRing) {
       val shellCells =
         if (prevRadius == 0) st.cellDisk(col("q_cell"), lit(radius))
@@ -249,6 +255,7 @@ object SpatialOps {
         pending = p
         pendingPersisted = Some(p)
       }
+      pendingPerPass += pendingCount
       supersededPending.foreach(_.unpersist(false))
       acc.foreach(_.unpersist(false)) // superseded; topk is fully materialized
       acc = Some(topk)
@@ -258,6 +265,8 @@ object SpatialOps {
     }
     acc.foreach(CacheTracker.register)
     pendingPersisted.foreach(CacheTracker.register) // released with the result
+    graft.obs.decision("knnJoin", "rings" -> prevRadius, "pending" -> pendingPerPass.result(),
+      "brute" -> (pendingCount > 0))
     val found = acc.map(_.select("q_id", "p_id", "dist", "rn"))
     // brute-force fallback for queries the ring search couldn't guarantee
     // (e.g. fewer than k points in the world) — empty in practice
@@ -477,27 +486,15 @@ object SpatialOps {
     * primitive ("group co-located images") composed from the two
     * scale-audited pieces: [[radiusPairs]] (cell-disk prefilter + exact
     * integer residual; no all-pairs anywhere) and
-    * `Dedup.connectedComponents` (default algorithm = "auto": min-label
-    * passes for the clique-ish dense hotspots, star-contraction fallback
-    * for stringy near-percolation chains whose diameter exceeds the label
-    * bound). Deterministic: the pair set is integer-quantized and the
-    * component minimum is order-free. */
+    * `Dedup.connectedComponents` (pointer-jumping min-label passes for the
+    * clique-ish dense hotspots, star contraction after 10 passes for
+    * stringy near-percolation chains; q46's converge on label pass 8 at
+    * sf0.01 and sf0.1). Deterministic: the pair set is integer-quantized
+    * and the component minimum is order-free. */
   def clusterPoints(df: DataFrame, id: Column, lon: Column, lat: Column,
-      radiusDeg: Double, res: Int, scale: Int = 1000,
-      algorithm: String = "auto"): DataFrame = {
+      radiusDeg: Double, res: Int, scale: Int = 1000): DataFrame = {
     val pairs = radiusPairs(df, id, lon, lat, radiusDeg, res, scale)
-    // autoLabelPasses = 10: with pointer jumping each pass doubles known
-    // distance, so 10 passes cover diameter ≈ 2^10. q46's near-percolation
-    // chains converge on label pass 8 at sf0.01 and sf0.1, so the star
-    // fallback does not run there; the old bound of 4 made `auto` pay 4
-    // wasted label passes PLUS the full star contraction (probe: auto(4)
-    // 5.9 s vs label-converged 3.0 s warm at sf0.1). The star fallback
-    // remains the safety net for truly adversarial graphs. Labels are
-    // algorithm-invariant (comp = component min id), so results are
-    // unchanged.
-    val comps = graft.operators.Dedup.connectedComponents(
-      pairs, col("id_a"), col("id_b"), algorithm = algorithm,
-      autoLabelPasses = 10)
+    val comps = graft.operators.Dedup.connectedComponents(pairs, col("id_a"), col("id_b"))
       .withColumnRenamed("id", "__cc_id")
     df.join(comps, id === col("__cc_id"), "left")
       .withColumn("cluster", coalesce(col("comp"), id.cast("long")))

@@ -170,10 +170,11 @@ object SnapshotTable {
     *
     * Concurrency: DISTINCT batchIds may commit concurrently — each writes
     * its own data dir and [[publish]] CASes the snapshot version (losers
-    * retry). Two writers racing the SAME batchId remain the caller's
-    * exclusion to provide (they would race Spark's overwrite inside one
-    * dir): sequential same-id replay is the supported resume shape, which
-    * is what Structured Streaming's epoch contract delivers.
+    * retry; a published batch reports its retries as an `obs` decision).
+    * Two writers racing the SAME batchId remain the caller's exclusion to
+    * provide (they would race Spark's overwrite inside one dir): sequential
+    * same-id replay is the supported resume shape, which is what Structured
+    * Streaming's epoch contract delivers.
     *
     * Layout: NOT repartitionByRange — its boundaries are sampled from the
     * input layout and vary with parallelism, breaking file byte-stability.
@@ -203,6 +204,7 @@ object SnapshotTable {
       if (cur.batchIds.contains(batchId)) return false
       try {
         publish(table, Snapshot(cur.version + 1, cur.batches :+ batch))
+        graft.obs.decision("commitBatch", "batch" -> batchId, "casRetries" -> attempts)
         return true
       } catch {
         case e: ConcurrentCommitException =>

@@ -90,6 +90,32 @@ class WktWkbSpec extends AnyFunSuite {
       assert(GeoJson.readGeom(GeoJson.write(g)) == g)
     }
   }
+  test("WKB, containsWkb and WKT nesting is bounded at Geom.MaxDepth; deeper gives None, not a stack overflow") {
+    // `d` levels: d - 1 single-member collections around the 10x10 square
+    def nestWkb(d: Int, root: Int = 7): Array[Byte] = {
+      val inner = Wkb.write(GPolygon(Vector(poly.rings.head)))
+      val buf = java.nio.ByteBuffer.allocate(9 * (d - 1) + inner.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      (1 until d).foreach(i => buf.put(1.toByte).putInt(if (i == 1) root else 7).putInt(1))
+      buf.put(inner).array()
+    }
+    def nestWkt(d: Int): String =
+      "GEOMETRYCOLLECTION (" * (d - 1) + "POINT (1 2)" + ")" * (d - 1)
+    val max = Geom.MaxDepth
+    val ok = Wkb.readOpt(nestWkb(max))
+    assert(ok.isDefined && Wkb.write(ok.get).length == nestWkb(max).length)
+    assert(Kernels.containsWkb(nestWkb(max), 5, 5) && !Kernels.containsWkb(nestWkb(max), 15, 5))
+    assert(Wkt.parseOpt(nestWkt(max)).isDefined)
+    for (d <- Seq(max + 1, 100000)) {
+      // `.map(_.kind)`: a failure message must not print the nested value
+      assert(Wkb.readOpt(nestWkb(d)).map(_.kind).isEmpty, s"wkb depth $d")
+      assert(Wkt.parseOpt(nestWkt(d)).map(_.kind).isEmpty, s"wkt depth $d")
+      // containsWkb fails loudly on malformed WKB, as on Z/M: it throws
+      // IllegalArgumentException, also where it only skips (a multipoint root)
+      intercept[IllegalArgumentException](Kernels.containsWkb(nestWkb(d), 5, 5))
+      intercept[IllegalArgumentException](Kernels.containsWkb(nestWkb(d, root = 4), 5, 5))
+    }
+  }
 }
 
 class GeomOpsSpec extends AnyFunSuite {

@@ -920,7 +920,7 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(kept.contains(25L) && kept.contains(40L))
   }
 
-  test("connectedComponentsStar + auto == union-find; long paths converge; label throws") {
+  test("connectedComponents star fallback == union-find; long paths converge") {
     def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else { val r = find(p); parent(x) = r; r } }
@@ -929,7 +929,7 @@ class DedupAnnSpec extends AnyFunSuite {
       }
       edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).toMap
     }
-    // seeded sweep through the star-contraction engine (same generator as
+    // seeded sweep through the star-contraction phase (same generator as
     // the label-propagation sweep)
     (1 to 10).foreach { seed =>
       val nNodes = 40 + (Kernels.mix64(seed) & 63L).toInt
@@ -940,38 +940,39 @@ class DedupAnnSpec extends AnyFunSuite {
         val y = java.lang.Long.remainderUnsigned(Kernels.mix64(h) >>> 1, nNodes)
         (x, if (x == y) (y + 1) % nNodes else y)
       }
-      val got = Dedup.connectedComponents(edges.toDF("ia", "ib"), col("ia"), col("ib"),
-        algorithm = "star").as[(Long, Long)].collect().toMap
+      val got = Dedup.connectedComponentsStar(edges.toDF("ia", "ib"), col("ia"), col("ib"))._1
+        .as[(Long, Long)].collect().toMap
       assert(got == unionFind(edges), s"seed $seed star mismatch")
       CacheTracker.releaseAll()
     }
     // a 200-node path (diameter 199): pointer-jumping label propagation
-    // converges in O(log d) passes — 10 suffice where the pre-shortcut
-    // engine needed 200 — and still THROWS (never a partial closure) when
-    // the bound is genuinely too small (4 passes cover distance 31 < 199)
+    // converges in O(log d) passes, within the label bound
     val path = (0L until 199L).map(i => (i, i + 1))
-    val lab = Dedup.connectedComponents(path.toDF("ia", "ib"), col("ia"), col("ib"),
-      maxIters = 10).as[(Long, Long)].collect().toMap
-    assert(lab == (0L to 199L).map(_ -> 0L).toMap)
-    CacheTracker.releaseAll()
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(path.toDF("ia", "ib"), col("ia"), col("ib"), maxIters = 4)
+    val (lab, labRec) = graft.obs.record(spark) {
+      Dedup.connectedComponents(path.toDF("ia", "ib"), col("ia"), col("ib"))
+        .as[(Long, Long)].collect().toMap
     }
+    assert(lab == (0L to 199L).map(_ -> 0L).toMap)
+    val Seq(labCc) = labRec.of("connectedComponents")
+    assert(labCc("star") == false && labCc("labelPasses").asInstanceOf[Int] <= Dedup.MaxLabelPasses)
     CacheTracker.releaseAll()
-    val auto = Dedup.connectedComponents(path.toDF("ia", "ib"), col("ia"), col("ib"),
-      algorithm = "auto").as[(Long, Long)].collect().toMap
-    assert(auto == (0L to 199L).map(_ -> 0L).toMap)
-    CacheTracker.releaseAll()
-    // permuted-id path: star roots must be component minima, not id-0 luck
+    // permuted-id path: the label bound runs out, star contraction takes
+    // over, and its roots must be component minima, not id-0 luck
     val perm = (0L until 150L).sortBy(i => Kernels.mix64(i) ^ Long.MinValue)
     val permEdges = perm.sliding(2).map(w => (w(0), w(1))).toSeq
-    val gotP = Dedup.connectedComponents(permEdges.toDF("ia", "ib"), col("ia"), col("ib"),
-      algorithm = "star").as[(Long, Long)].collect().toMap
+    val (gotP, rec) = graft.obs.record(spark) {
+      Dedup.connectedComponents(permEdges.toDF("ia", "ib"), col("ia"), col("ib"))
+        .as[(Long, Long)].collect().toMap
+    }
     assert(gotP == unionFind(permEdges) && gotP.values.toSet == Set(0L))
+    val Seq(cc) = rec.of("connectedComponents")
+    assert(cc("star") == true && cc("labelPasses") == Dedup.MaxLabelPasses &&
+      cc("passMs").asInstanceOf[Seq[Long]].length == Dedup.MaxLabelPasses &&
+      cc("starRounds").asInstanceOf[Int] > 0, cc)
     CacheTracker.releaseAll()
     // empty input
-    assert(Dedup.connectedComponents(path.toDF("ia", "ib").limit(0), col("ia"), col("ib"),
-      algorithm = "star").count() == 0)
+    assert(Dedup.connectedComponentsStar(path.toDF("ia", "ib").limit(0), col("ia"), col("ib"))
+      ._1.count() == 0)
     CacheTracker.releaseAll()
   }
 

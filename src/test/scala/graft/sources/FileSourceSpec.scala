@@ -237,8 +237,9 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.SpatialOps
     // points stream in micro-batches; the polygon dictionary is the static
-    // broadcast side — pipJoin's cell equi-join + exact contains residual
-    // must behave identically under Structured Streaming (geofencing)
+    // broadcast side — pipJoin's one PipJoin node (cell index probe + exact
+    // contains) must behave identically under Structured Streaming
+    // (geofencing)
     val polys = graft.EntryQueries.districtPolygons(spark)
     val pts = ImageTable.metaDf(spark, 0, 3000)
       .withColumn("lon", SpatialOps.phashLon(col("phash")))
