@@ -17,7 +17,8 @@
 # times (default 3) on SPARK_GRAFT_SF_DIR (default sf0.1) with
 # SPARK_GRAFT_CPUS cores (default 4), and the summary compares each
 # query's min-of-N seconds (its "min"; the "record" of the untimed recorded
-# run is not read); --workload, --seed and --trace do not apply.
+# run is not read) and, per query and side, in how many runs that min was
+# the first timed sample; --workload, --seed and --trace do not apply.
 #
 # Every side runs from its own export, in sibling directories of one
 # temporary directory (removed on exit), so no side runs from a different
@@ -47,7 +48,7 @@ while [ $# -gt 0 ]; do
     --out) out=$2; shift 2 ;;
     --aa) aa=1; shift ;;
     --benchx) benchx=$2; shift 2 ;;
-    -h|--help) sed -n '2,35p' "$0"; exit 0 ;;
+    -h|--help) sed -n '2,36p' "$0"; exit 0 ;;
     *) echo "unknown argument: $1" >&2; exit 2 ;;
   esac
 done
@@ -159,6 +160,15 @@ for side in sides:
     else:
         print(f"{side}: {len(ok)}/{pairs} runs, correct {sum(r['correct'] for r in ok)}, "
               f"failed/attempted {sum(r['failed'] for r in ok)}/{sum(r['attempted'] for r in ok)}")
+# how warm each min is: in how many runs the min was the first timed sample
+# (read before `runs` is reduced to mins)
+firsts = {}
+if benchx:
+    for q in better:
+        for side in sides:
+            timed = [r["queries"][q] for r in runs[side]
+                     if r and r["queries"].get(q, {}).get("samples")]
+            firsts[q, side] = f"{sum(v['samples'][0] == v['min'] for v in timed)}/{len(timed)}"
 runs = {side: [values(r) if r else None for r in runs[side]] for side in sides}
 names = sorted({k for side in runs.values() for r in side if r for k in r},
                key=lambda n: (n not in e2e, e2e.index(n) if n in e2e else 0, n))
@@ -179,4 +189,7 @@ for n in names:
           + (f"{wins:>2}/{both:<2}" if n in better else "  -  ")
           + f"  {gap(med['change'], med['base']):>8}"
           + (f"  {gap(med['aa'], med['base']):>8}" if "aa" in sides else ""))
+if firsts:
+    print("runs whose min is the first timed sample: "
+          + "; ".join(f"{q} " + " ".join(f"{side} {firsts[q, side]}" for side in sides) for q in better))
 EOF

@@ -20,26 +20,26 @@ import org.apache.spark.sql.expressions.Window
   *    oracle asserts exactly that at gate scales). Known limitation: the
   *    metric rides on pair rows, so a corpus where EVERY candidate pair
   *    lives in dropped buckets yields an empty frame and the nonzero drop
-  *    count is not observable from the output alone — callers that must
-  *    distinguish "no near-dups" from "all buckets dropped" should lower
-  *    `maxBucket` expectations or count oversized buckets directly
-  *    (`groupBy(band, hash).count.filter(_ > maxBucket)`) on their corpus;
-  *  - IN-cap buckets never concentrate work either: pairs are generated
-  *    through [[chunkPairRows]], so per-row and per-task pair volume is
-  *    bounded by `chunkSize²` regardless of bucket size (a 64k-member
-  *    in-cap bucket becomes C(128,2)+128 ≈ 8k distributable chunk-pair
-  *    rows, not one 2·10⁹-pair row).
+  *    count is not observable from the output alone — the `bandedPairs`
+  *    decision of a [[graft.obs]] record shows it as `nDropped`;
+  *  - IN-cap buckets never concentrate work either: each bucket's members
+  *    are collected once and split in place into chunk pairs by
+  *    [[chunkPairRows]], so per-row pair volume is bounded by `chunkSize²`
+  *    regardless of bucket size (a 64k-member in-cap bucket becomes
+  *    C(128,2)+128 ≈ 8k chunk-pair rows spread across tasks, not one
+  *    2·10⁹-pair row).
   *
   * These contracts live in ONE place, the private banded-candidate core
   * `bandedPairs` shared by MinHash ([[minhashCandidates]]), the
   * pigeonhole-Hamming engine ([[hammingPairs64]]) and the embedding
   * near-dup: it persists the signatures, counts the (band, hash)
-  * histogram, applies the cap, picks the chunked branch, returns each
-  * candidate pair once (the cross-band dedup) and reports the drop count.
+  * histogram, applies the cap, generates the chunk pairs (spreading those
+  * of buckets above the chunk size), returns each candidate pair once (the
+  * cross-band dedup) and reports the drop count.
   * The families add only their signature, band values and verification.
   * `bucketStats`' precondition — counts taken over a persisted,
-  * deterministic signature frame, since its driver-side numbers gate which
-  * pairs survive — is met there, by the core owning the persist.
+  * deterministic signature frame, since its driver-side drop count gates
+  * which pairs survive — is met there, by the core owning the persist.
   * ([[decontaminateLarge]] keeps its own cross-side banding: its over-cap
   * buckets fail safe instead of being dropped.)
   */
@@ -62,65 +62,45 @@ object Dedup {
   private[graft] val RatioDen = 100L
   private[graft] def ratioNum(minJ: Double): Long = math.floor(minJ * 100).toLong
 
-  /** Chunk-pair rows for bounded in-bucket pair generation. `kept` must
-    * carry the bucket count `__bn` plus the `x` payload struct (id-first).
+  /** Chunk-pair rows for bounded in-bucket pair generation. `kept` carries
+    * the `x` payload struct (id-first) of every member of each bucket.
     *
-    * Buckets at or under `chunkSize` — virtually all of them on a healthy
-    * corpus — take the original one-shuffle path: one collect_list row per
-    * bucket (cka = ckb = 0), no window, no extra exchange. Buckets above it
-    * are deterministically ordered, split into chunks of `chunkSize`, and
-    * every chunk pair (i ≤ j) becomes ONE row carrying the two member
-    * arrays, hash-redistributed on (key, chunk_i, chunk_j) so the
-    * subsequent explode spreads across the cluster — per-row and per-task
-    * pair volume is bounded by chunkSize² independently of bucket size.
-    * Ordering by id across chunks preserves the id_a < id_b orientation. */
-  /** `smallOnly = true` (callers pass it only after PROVING max in-cap
-    * bucket ≤ chunkSize via [[bucketStats]]) omits the chunked branch
-    * entirely: its window + self-join + redistribution exchanges cost
-    * ~0.7 s of serialized empty-stage rounds per invocation even when no
-    * bucket qualifies (probed at sf0.1) — the operator-level analog of
-    * AQE's runtime plan adaptation. */
+    * ONE aggregate collects each bucket's members, sorted by id; the bucket
+    * row then expands in place. Its ⌈members / chunkSize⌉ chunks are
+    * contiguous runs of the sorted list, and every chunk pair i ≤ j becomes
+    * one row carrying chunk i (`__xa`) and, for i < j, chunk j (`__xb`;
+    * empty for i = j, whose rows never read it). A bucket within
+    * `chunkSize` gives its one (0, 0) row. Per-row pair volume is bounded by
+    * chunkSize² independently of bucket size, and ordering by id preserves
+    * the id_a < id_b orientation across chunks. */
   private[operators] def chunkPairRows(
-      kept: DataFrame, keyCols: Seq[String], chunkSize: Int,
-      smallOnly: Boolean = false): DataFrame = {
+      kept: DataFrame, keyCols: Seq[String], chunkSize: Int): DataFrame = {
     val keyC = keyCols.map(col)
-    val small = kept.filter(col("__bn") <= chunkSize)
-      .groupBy(keyC: _*)
-      .agg(sort_array(collect_list(col("x"))).as("__xa"))
-      .select(keyC ++ Seq(lit(0).as("__cka"), lit(0).as("__ckb"), col("__xa"),
-        // intra rows never read __xb (lazy CaseWhen) — ship an empty array
-        slice(col("__xa"), 1, 0).as("__xb")): _*)
-    if (smallOnly) return small
-    val w = Window.partitionBy(keyC: _*).orderBy(col("x"))
-    val chunks = kept.filter(col("__bn") > chunkSize)
-      .withColumn("__ck", ((row_number().over(w) - 1).cast("long") / chunkSize).cast("int"))
-      .groupBy((keyC :+ col("__ck")): _*)
+    val (i, j) = (col("__ck.i"), col("__ck.j"))
+    val last = s"int((size(xs) - 1) div $chunkSize)"
+    def chunk(k: Column): Column = slice(col("xs"), k * chunkSize + 1, lit(chunkSize))
+    kept.groupBy(keyC: _*)
       .agg(sort_array(collect_list(col("x"))).as("xs"))
-    val left = chunks.select(keyC ++ Seq(col("__ck").as("__cka"), col("xs").as("__xa")): _*)
-    val right = chunks.select(keyC ++ Seq(col("__ck").as("__ckb"), col("xs").as("__xb")): _*)
-    val large = left.join(right, keyCols)
-      .filter(col("__cka") <= col("__ckb"))
-      .repartition((keyC ++ Seq(col("__cka"), col("__ckb"))): _*)
-      .select(keyC ++ Seq(col("__cka"), col("__ckb"), col("__xa"), col("__xb")): _*)
-    small.unionByName(large)
+      .withColumn("__ck", explode(expr(
+        s"flatten(transform(sequence(0, $last), i -> transform(sequence(i, $last), j -> struct(i, j))))")))
+      .select(keyC ++ Seq(i.as("__cka"), j.as("__ckb"), chunk(i).as("__xa"),
+        when(i < j, chunk(j)).otherwise(slice(col("xs"), 1, 0)).as("__xb")): _*)
   }
 
   /** One bounded action over the (band, hash) histogram: the number of
     * over-cap (dropped) buckets and the largest in-cap bucket. Drives two
-    * runtime plan choices that a lazy plan cannot make: (a) skip the
-    * chunked pair machinery when no in-cap bucket exceeds the chunk size —
-    * the overwhelmingly common shape — and (b) attach `n_dropped_buckets`
-    * as a literal instead of a broadcast cross-join. The extra pass re-runs
-    * one map-side-combined count aggregation over cached signatures — a
-    * few percent of the operator's cost at any scale, bought back by the
-    * three exchanges (and their serialized AQE rounds) the common case no
-    * longer plans.
+    * runtime plan choices that a lazy plan cannot make: (a) plan the
+    * exchange that spreads multi-chunk rows only when some in-cap bucket
+    * exceeds the chunk size (the common shape has none), and (b) attach
+    * `n_dropped_buckets` as a literal instead of a broadcast cross-join.
+    * The extra pass re-runs one map-side-combined count aggregation over
+    * cached signatures — a few percent of the operator's cost at any scale.
     *
     * Precondition: `counts` must derive from a PERSISTED, deterministic
-    * signature frame. The two numbers are frozen driver-side and gate
-    * correctness — `smallOnly` drops buckets above the chunk size and
-    * `nDropped == 0` enables the first-agreeing-band dedup — so a recompute
-    * that disagreed with them would lose pairs while reporting no drops.
+    * signature frame. `nDropped` is frozen driver-side and gates
+    * correctness — `nDropped == 0` enables the first-agreeing-band dedup —
+    * so a recompute that disagreed with it would lose pairs while reporting
+    * no drops (`maxInCap` only decides whether the spread is planned).
     * [[bandedPairs]], its only caller, meets it by owning the persist. */
   private def bucketStats(counts: DataFrame, maxBucket: Int): (Long, Long) = {
     val r = counts.agg(
@@ -129,30 +109,28 @@ object Dedup {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** [[chunkPairRows]] → exploded (band, a, b) payload pairs, each unordered
-    * pair exactly once per bucket (intra-chunk: strict upper triangle;
-    * inter-chunk: full cross product — chunks partition the bucket). */
-  private def chunkedBucketPairs(kept: DataFrame, chunkSize: Int, smallOnly: Boolean): DataFrame =
-    chunkPairRows(kept, Seq("band", "bh"), chunkSize, smallOnly)
-      .select(col("band"), explode(when(col("__cka") === col("__ckb"),
-          expr(
-            """flatten(transform(__xa, (x, i) ->
-              |  transform(slice(__xa, i + 2, size(__xa) - i - 1), y -> struct(x AS a, y AS b))))""".stripMargin))
-        .otherwise(
-          expr("flatten(transform(__xa, x -> transform(__xb, y -> struct(x AS a, y AS b))))"))).as("p"))
-      .select(col("band"), col("p.a").as("a"), col("p.b").as("b"))
-
   /** THE banded-candidate core of the LSH family ([[minhashCandidates]],
     * [[hammingPairs64]], [[embeddingNearDup]]): persist the signature frame
     * `sigs` (columns `id` and `key`, plus anything the caller joins back),
     * explode `bandsOf(key)` (one value per band) into (band, bh) buckets,
     * count the histogram, cap it at `maxBucket`, pair each in-cap bucket's
-    * (id, key) structs through the bounded chunk generator and dedup across
-    * bands. Returns the candidate pairs (id_a, id_b, n_bands_matched, a, b)
-    * — a and b the two (id, key) structs, id_a < id_b, EACH PAIR ONCE — the
+    * (id, key) structs through [[chunkPairRows]] and dedup across bands.
+    * Returns the candidate pairs (id_a, id_b, n_bands_matched, a, b) — a
+    * and b the two (id, key) structs, id_a < id_b, EACH PAIR ONCE — the
     * number of dropped buckets, and the persisted frame for the caller's
-    * verify joins. The drop count, largest in-cap bucket, chunked branch
-    * and dedup mode are reported as an `obs` decision.
+    * verify joins. The drop count, largest in-cap bucket, whether no row
+    * was spread (`smallOnly`) and the dedup mode are reported as an `obs`
+    * decision.
+    *
+    * Spread: the chunk-pair rows of buckets above `chunkSize` are
+    * hash-redistributed on (band, bh, chunk i, chunk j), so one large
+    * bucket's pair explode runs across tasks; single-chunk rows stay where
+    * the aggregate put them. The exchange is planned only when
+    * [[bucketStats]] saw an in-cap bucket above `chunkSize`; the buckets
+    * are then split on their histogram count before the aggregate, so each
+    * is still collected once. (Filtering one aggregate's output twice
+    * instead relies on Spark reusing its exchange; for q21's MinHash frame
+    * at sf0.1 it did not, and the aggregate's map side ran twice.)
     *
     * Cross-band dedup: when NO bucket was dropped (known driver-side; the
     * overwhelmingly common shape), every agreeing band's bucket is present,
@@ -173,21 +151,36 @@ object Dedup {
   private[operators] def bandedPairs(
       sigs: DataFrame, key: String, bandsOf: Column => Seq[Column],
       maxBucket: Int, chunkSize: Int): (DataFrame, Long, DataFrame) = {
+    require(chunkSize >= 1, s"chunkSize must be >= 1, got $chunkSize")
     val persisted = CacheTracker.register(
       sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val banded = persisted.select(col("id"), col(key),
       posexplode(array(bandsOf(col(key)): _*)).as(Seq("band", "bh")))
     // count first: the (band, bh) histogram decides which buckets survive
-    // the cap; both aggregations shuffle on the same key, so AQE reuses the
-    // exchange and the oversized buckets never reach collect_list
+    // the cap, so the oversized buckets never reach collect_list
     val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
     val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
     val kept = banded
       .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
       .select(col("band"), col("bh"), col("__bn"), struct(col("id"), col(key)).as("x"))
-    val agree = bandsOf(col(s"a.$key")).zip(bandsOf(col(s"b.$key"))).map { case (x, y) => x === y }
+    def pairRows(k: DataFrame): DataFrame = chunkPairRows(k, Seq("band", "bh"), chunkSize)
     val smallOnly = maxInCap <= chunkSize
-    val pairs = chunkedBucketPairs(kept, chunkSize, smallOnly)
+    val spread = if (smallOnly) pairRows(kept) else {
+      val multi = col("__bn") > chunkSize
+      pairRows(kept.filter(!multi)).unionByName(pairRows(kept.filter(multi))
+        .repartition(col("band"), col("bh"), col("__cka"), col("__ckb")))
+    }
+    // each unordered pair once per bucket: intra-chunk rows give the strict
+    // upper triangle, inter-chunk rows the full cross product
+    val agree = bandsOf(col(s"a.$key")).zip(bandsOf(col(s"b.$key"))).map { case (x, y) => x === y }
+    val pairs = spread
+      .select(col("band"), explode(when(col("__cka") === col("__ckb"),
+          expr(
+            """flatten(transform(__xa, (x, i) ->
+              |  transform(slice(__xa, i + 2, size(__xa) - i - 1), y -> struct(x AS a, y AS b))))""".stripMargin))
+        .otherwise(
+          expr("flatten(transform(__xa, x -> transform(__xb, y -> struct(x AS a, y AS b))))"))).as("p"))
+      .select(col("band"), col("p.a").as("a"), col("p.b").as("b"))
       .select(col("band"), col("a.id").as("id_a"), col("b.id").as("id_b"),
         agree.map(when(_, 1L).otherwise(0L)).reduce(_ + _).as("n_bands_matched"),
         col("a"), col("b"))
@@ -512,18 +505,22 @@ object Dedup {
     * Algorithm: min-label propagation with pointer jumping — each pass
     * sends every node's label to its neighbors, takes the min, then
     * follows the resulting label to ITS label (the Hash-to-Min shortcut),
-    * so known-distance doubles per pass and convergence is O(log diameter)
-    * passes (a 200-node chain converges in ~8, spec-pinned), two bounded
-    * shuffles per pass. Min is associative and labels only decrease, so
-    * the result is partition-invariant and deterministic. Convergence is
-    * detected by the strictly-decreasing label sum (exact DECIMAL(38) —
-    * overflow-safe at any id scale, one tiny aggregate action per pass).
+    * two bounded shuffles per pass. Where ids grow along the graph,
+    * known-distance doubles per pass, so convergence takes O(log diameter)
+    * passes (a 200-node ordered chain converges in ~8, spec-pinned); in
+    * general it does not: the 150-node permuted-id path of `DedupAnnSpec`
+    * spends all [[MaxLabelPasses]] passes. Min is associative and labels
+    * only decrease, so the result is partition-invariant and deterministic.
+    * Convergence is detected by the strictly-decreasing label sum (exact
+    * DECIMAL(38) — overflow-safe at any id scale, one tiny aggregate action
+    * per pass).
     *
-    * After [[MaxLabelPasses]] passes without convergence (a diameter
-    * beyond ≈ 2^10, or a graph whose minima spread slowly) the labels are
-    * dropped and star contraction ([[connectedComponentsStar]]) computes
-    * the components instead — the same labels, so a pipeline never dies
-    * on an unexpectedly stringy graph and never returns a partial closure.
+    * The fallback bounds the cost: after [[MaxLabelPasses]] passes without
+    * convergence (a stringy graph whose ids do not grow along it, or a
+    * diameter beyond ≈ 2^10) the labels are dropped and star contraction
+    * ([[connectedComponentsStar]]) computes the components instead — the
+    * same labels, so a pipeline never dies on an unexpectedly stringy graph
+    * and never returns a partial closure.
     * Reports its label passes, per-pass ms and whether (and for how many
     * rounds) the star fallback ran as an `obs` decision. */
   def connectedComponents(pairs: DataFrame, a: Column, b: Column): DataFrame = {
@@ -605,10 +602,8 @@ object Dedup {
       val stepped = labels.unionByName(msgs)
         .groupBy("id").agg(min("comp").as("comp")).localCheckpoint(false)
       // pointer jump (the Hash-to-Min shortcut): follow each label to ITS
-      // label — known-distance doubles per pass, so convergence is
-      // O(log diameter) passes, not O(diameter) (a chain-shaped dedup
-      // graph previously burned a pass per hop and pushed it into the star
-      // fallback after paying all its label passes). comp values are
+      // label — where ids grow along the graph, known-distance doubles per
+      // pass (O(log diameter) passes, not O(diameter)). comp values are
       // same-component node ids and only ever decrease, so the min-label
       // fixpoint — and the sum-based convergence test — are unchanged.
       // Every comp IS a node id present in `stepped`; the left join +
@@ -736,10 +731,11 @@ object Dedup {
     * `quality` must be integer-valued for cross-engine determinism (e.g.
     * [[TextOps.qualityScoreBp]]); float scores make the argmax order
     * engine-dependent. Plan shape at scale: the closure's per-pass shuffles
-    * (pointer jumping needs O(log diameter) label passes, up to
-    * [[MaxLabelPasses]], then star contraction) + one left join on the doc
-    * id + one window on the high-cardinality `comp` key — both window
-    * aggregates (rank, size) share a single exchange. No driver collects. */
+    * (up to [[MaxLabelPasses]] label passes — O(log diameter) only where
+    * ids grow along the graph — then star contraction, which bounds the
+    * cost) + one left join on the doc id + one window on the
+    * high-cardinality `comp` key — both window aggregates (rank, size)
+    * share a single exchange. No driver collects. */
   def keepBest(docs: DataFrame, id: Column, quality: Column,
                pairs: DataFrame, a: Column, b: Column): DataFrame = {
     val comps = connectedComponents(pairs, a, b)
@@ -774,10 +770,11 @@ object Dedup {
     *
     * Same hot-bucket cap + metric column as [[minhashCandidates]]; the id
     * AND signature ride inside the bucket struct so verification needs no
-    * join back to the corpus. In-bucket pairs are generated through
-    * [[chunkPairRows]] so an in-cap hot bucket (up to `maxBucket` members)
-    * never materializes more than `chunkSize²` pairs in any one row or
-    * task. Returns (id_a, id_b, hamming, n_dropped_buckets), id_a < id_b.
+    * join back to the corpus. Each bucket is collected once and split in
+    * place into chunk pairs ([[chunkPairRows]]), so an in-cap hot bucket
+    * (up to `maxBucket` members) explodes at most `chunkSize²` pairs from
+    * any one row, and its rows spread across tasks. Returns
+    * (id_a, id_b, hamming, n_dropped_buckets), id_a < id_b.
     */
   def simhashPairs(
       df: DataFrame, id: Column, text: Column,

@@ -599,13 +599,19 @@ class DedupAnnSpec extends AnyFunSuite {
       chunkSize = 16)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(chunked == whole, s"missing=${whole -- chunked} extra=${chunked -- whole}")
-    // identical docs spanning many chunks: every unordered pair exactly once
-    val same = spark.range(500).select(col("id").as("doc_id"),
-      lit("identical text in every row of this block").as("text"))
-    val pairs = Dedup.simhashPairs(same, col("doc_id"), col("text"),
-      maxHamming = 0, chunkSize = 64)
-    assert(pairs.count() == 500L * 499 / 2)
-    assert(pairs.filter(col("id_a") >= col("id_b")).count() == 0)
+    // identical docs spanning many chunks: every unordered pair exactly once,
+    // at and around the chunk boundaries (65 = one chunk plus a one-member tail)
+    for (n <- Seq(63, 64, 65, 128, 129, 500)) {
+      val same = spark.range(n).select(col("id").as("doc_id"),
+        lit("identical text in every row of this block").as("text"))
+      val pairs = Dedup.simhashPairs(same, col("doc_id"), col("text"),
+        maxHamming = 0, chunkSize = 64)
+      assert(pairs.count() == n.toLong * (n - 1) / 2, s"bucket of $n")
+      assert(pairs.filter(col("id_a") >= col("id_b")).count() == 0, s"bucket of $n")
+    }
+    for (bad <- Seq(0, -1))
+      intercept[IllegalArgumentException](
+        Dedup.simhashPairs(d, col("doc_id"), col("text"), chunkSize = bad))
   }
 
   test("banded embedding near-dup: planted near-copies found, predicate exact vs brute") {
@@ -697,6 +703,20 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(byChunk(1) == byChunk(0),
       s"missing=${byChunk(0) -- byChunk(1)} extra=${byChunk(1) -- byChunk(0)}")
     assert(byChunk(0).count(p => p._1 >= 10000L && p._2 >= 10000L) == 40 * 39 / 2)
+    // the large buckets split in place: no window numbers the members and
+    // no join pairs two collected chunk frames
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Window}
+    def collects(p: LogicalPlan): Boolean = p.exists {
+      case a: Aggregate => a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CollectList]))
+      case _ => false
+    }
+    val plan = Dedup.minhashCandidates(d, col("doc_id"), col("text"), chunkSize = 16)
+      .queryExecution.optimizedPlan
+    CacheTracker.releaseAll()
+    assert(plan.collect { case w: Window => w }.isEmpty, plan.treeString)
+    assert(plan.collect { case j: Join if collects(j.left) && collects(j.right) => j }.isEmpty,
+      plan.treeString)
   }
 
   test("minhash candidates: each pair once with and without drops; no pair aggregate without drops") {
